@@ -204,12 +204,13 @@ object StoreOps {
       array(struct(lit("a").as("code"), heading.as("value"),
         lit(null).cast("long").as("xref"))).as("subfields"))))
 
-  /** q62's commit batches, exposed for tools.ProfileStore. */
-  def profAuthBatch(s: SparkSession, dir: String): DataFrame =
+  /** q62's commit batches: auths, bibs linking auth 500, and the
+    * heading change on auth 500 that cascades to them. */
+  private def profAuthBatch(s: SparkSession, dir: String): DataFrame =
     part(s, dir).where(col("p_partkey") % 500 === 0)
       .select(authRowCol(col("p_partkey").cast("long"), col("p_name")).as("r")).select("r.*")
 
-  def profBibBatch(s: SparkSession, dir: String): DataFrame =
+  private def profBibBatch(s: SparkSession, dir: String): DataFrame =
     orders(s, dir).where(col("o_orderkey") % 97 === 0)
       .select(marcRowCol(lit("bib"), col("o_orderkey"),
         array(
@@ -220,7 +221,7 @@ object StoreOps {
             array(struct(lit("a").as("code"), lit(null).cast("string").as("value"),
               lit(500L).as("xref"))).as("subfields")))).as("r")).select("r.*")
 
-  def profChangedAuth(s: SparkSession, dir: String): DataFrame =
+  private def profChangedAuth(s: SparkSession, dir: String): DataFrame =
     part(s, dir).where(col("p_partkey") === 500)
       .select(authRowCol(lit(500L), lit("CHANGED")).as("r")).select("r.*")
 

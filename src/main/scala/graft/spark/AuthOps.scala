@@ -26,23 +26,6 @@ object AuthOps {
           when(s.getField("xref") === losing, gaining)
             .otherwise(s.getField("xref")).as("xref"))).as("subfields")))))
 
-  /** update_attached_records heading retag
-    * (dlx/marc/__init__.py:1155-1232): when an auth heading moves from
-    * `oldTag` to `newTag` (e.g. 150 -> 151), every attached record's
-    * linked field tag is rewritten to field.tag[0] + newTag[1:] —
-    * applied only to fields actually referencing the auth id. */
-  def retagAttached(records: DataFrame, authId: Long, newHeadingTag: String): DataFrame = {
-    val newSuffix = newHeadingTag.substring(1)
-    records.withColumn("datafields",
-      transform(col("datafields"), f => struct(
-        when(exists(f.getField("subfields"), s => s.getField("xref") === authId),
-          concat(substring(f.getField("tag"), 1, 1), lit(newSuffix)))
-          .otherwise(f.getField("tag")).as("tag"),
-        f.getField("ind1").as("ind1"),
-        f.getField("ind2").as("ind2"),
-        f.getField("subfields").as("subfields"))))
-  }
-
   /** Full heading-change cascade (update_attached_records,
     * dlx/marc/__init__.py:1155-1232) as ONE array transform over the
     * records table — three effects applied only to fields referencing
@@ -84,97 +67,56 @@ object AuthOps {
       }))
   }
 
-  /** One auth's structural heading delta, pre-computed driver-side:
-    * `newSuffix` is Some(tag minus its first char) when the heading
-    * tag moved, `removed`/`added` are the code-set delta. */
-  final case class HeadingStructChange(newSuffix: Option[String],
-      removed: Set[String], added: Seq[String])
+  /** One auth's structural heading delta: `newSuffix` is Some(tag
+    * minus its first char) when the heading tag moved, `removed`/
+    * `added` are the code-set delta. The driver-side map of the
+    * under-cap cascade and the per-record change list of the over-cap
+    * cascade both carry it. */
+  final case class HeadingStructChange(xref: Long, newSuffix: Option[String],
+      removed: Seq[String], added: Seq[String])
+
+  /** The per-field fold both cascade regimes share — same per-field
+    * effects as [[cascadeHeadingChange]]: retag when the heading tag
+    * moved, drop removed-code subfields, append added codes as
+    * unresolved linked subfields. A field referencing several changed
+    * auths applies them in ascending xref order (deterministic). */
+  private def applyStructChanges(r: MarcRow, changeOf: Long => Option[HeadingStructChange]): MarcRow =
+    r.copy(datafields = r.datafields.map { f =>
+      val hit = f.subfields.flatMap(s => Option(s.xref)).map(_.longValue)
+        .distinct.sorted.flatMap(changeOf)
+      hit.foldLeft(f) { (fld, ch) =>
+        val tag2 = ch.newSuffix.fold(fld.tag)(sfx => fld.tag.substring(0, 1) + sfx)
+        val afterDrop =
+          if (ch.removed == null || ch.removed.isEmpty) fld.subfields
+          else { val rm = ch.removed.toSet; fld.subfields.filterNot(s => rm.contains(s.code)) }
+        val afterAdd =
+          if (ch.added == null || ch.added.isEmpty) afterDrop
+          else afterDrop ++ ch.added.map(c =>
+            SubfieldRow(c, null, java.lang.Long.valueOf(ch.xref)))
+        fld.copy(tag = tag2, subfields = afterAdd)
+      }
+    })
 
   /** Structural cascade for a whole BATCH of heading changes in ONE
-    * typed pass: a broadcast hash dimension (xref → tag suffix / code
-    * drops / adds) keyed by each field's referenced xrefs. Replaces
+    * typed pass — the under-cap regime: a broadcast hash dimension
+    * (xref → change) keyed by each field's referenced xrefs. Replaces
     * the per-auth projection fold, whose PLAN DEPTH grew linearly with
     * the number of changed auths in a commit batch — a bulk retag
     * (hundreds of changed headings, e.g. a taxonomy migration) hit
     * Catalyst analysis/codegen blowup long before data size mattered.
     * Here the plan is one MapElements regardless of batch size, and
-    * lookups are O(1) hash probes. A field referencing several changed
-    * auths applies them in ascending xref order (deterministic; the
-    * old fold applied Map iteration order). Same per-field effects as
-    * [[cascadeHeadingChange]]: retag when the heading tag moved, drop
-    * removed-code subfields, append added codes as unresolved linked
-    * subfields. */
+    * lookups are O(1) hash probes. */
   def cascadeHeadingChangesBulk(records: org.apache.spark.sql.Dataset[MarcRow],
-      changes: Map[Long, HeadingStructChange]): org.apache.spark.sql.Dataset[MarcRow] = {
+      changes: Seq[HeadingStructChange]): org.apache.spark.sql.Dataset[MarcRow] = {
     import MarcSchema.marcRowEncoder
     if (changes.isEmpty) return records
-    val bc = records.sparkSession.sparkContext.broadcast(changes)
-    records.map { r =>
-      r.copy(datafields = r.datafields.map { f =>
-        val hit = f.subfields.flatMap(s => Option(s.xref)).map(_.longValue)
-          .distinct.filter(bc.value.contains).sorted
-        hit.foldLeft(f) { (fld, id) =>
-          val ch = bc.value(id)
-          val tag2 = ch.newSuffix.fold(fld.tag)(sfx => fld.tag.substring(0, 1) + sfx)
-          val afterDrop =
-            if (ch.removed.isEmpty) fld.subfields
-            else fld.subfields.filterNot(s => ch.removed.contains(s.code))
-          val afterAdd =
-            if (ch.added.isEmpty) afterDrop
-            else afterDrop ++ ch.added.map(c =>
-              SubfieldRow(c, null, java.lang.Long.valueOf(id)))
-          fld.copy(tag = tag2, subfields = afterAdd)
-        }
-      })
-    }
+    val bc = records.sparkSession.sparkContext.broadcast(changes.map(c => c.xref -> c).toMap)
+    records.map(r => applyStructChanges(r, bc.value.get))
   }
-
-  /** One struct-change row of the distributed cascade's per-record
-    * change list (nullable newSuffix = heading tag unchanged). */
-  final case class CascadeChange(xref: Long, newSuffix: String,
-      removed: Seq[String], added: Seq[String])
 
   /** A record paired with the heading-struct changes that apply to it
     * (null/empty = value-only cascade, structure untouched). */
-  final case class CascadeInput(rec: MarcRow, changes: Seq[CascadeChange])
-
-  /** Structural cascade with the change dimension JOINED per record —
-    * the over-cap twin of [[cascadeHeadingChangesBulk]] (round-11
-    * verdict #1): instead of a closure-captured Map of every changed
-    * auth, each record arrives with exactly ITS relevant changes
-    * (sorted by xref — the same deterministic application order), so
-    * driver state is O(1) regardless of how many auths a bulk
-    * re-heading batch touched. Same per-field effects: retag when the
-    * heading tag moved, drop removed-code subfields, append added
-    * codes as unresolved linked subfields. */
-  def cascadeHeadingChangesJoined(input: DataFrame)
-      : org.apache.spark.sql.Dataset[MarcRow] = {
-    import MarcSchema.marcRowEncoder
-    implicit val inputEnc: org.apache.spark.sql.Encoder[CascadeInput] =
-      org.apache.spark.sql.Encoders.product[CascadeInput]
-    input.as[CascadeInput].map { ci =>
-      if (ci.changes == null || ci.changes.isEmpty) ci.rec
-      else {
-        val byId = ci.changes.iterator.map(c => c.xref -> c).toMap
-        ci.rec.copy(datafields = ci.rec.datafields.map { f =>
-          val hit = f.subfields.flatMap(s => Option(s.xref)).map(_.longValue)
-            .distinct.filter(byId.contains).sorted
-          hit.foldLeft(f) { (fld, id) =>
-            val ch = byId(id)
-            val tag2 = Option(ch.newSuffix).fold(fld.tag)(sfx => fld.tag.substring(0, 1) + sfx)
-            val afterDrop =
-              if (ch.removed == null || ch.removed.isEmpty) fld.subfields
-              else { val rm = ch.removed.toSet; fld.subfields.filterNot(s => rm.contains(s.code)) }
-            val afterAdd =
-              if (ch.added == null || ch.added.isEmpty) afterDrop
-              else afterDrop ++ ch.added.map(c =>
-                SubfieldRow(c, null, java.lang.Long.valueOf(id)))
-            fld.copy(tag = tag2, subfields = afterAdd)
-          }
-        })
-      }
-    }
-  }
+  final case class CascadeInput(rec: MarcRow, changes: Seq[HeadingStructChange])
 
   /** every distinct subfield xref of a record, as a Column. */
   private[graft] def subfieldXrefs: Column =
@@ -194,13 +136,19 @@ object AuthOps {
     records.join(hitIds, Seq("_id"), "left_semi")
   }
 
-  /** The over-cap structural cascade as FRAMES: join each attached
-    * record with exactly its relevant struct changes (sorted by xref)
-    * and apply them through [[cascadeHeadingChangesJoined]]. `changes`
-    * columns: (xref, new_suffix, removed, added) — value-only change
-    * rows (null suffix, empty code deltas) are filtered out here. */
+  /** The over-cap structural cascade as FRAMES (round-11 verdict #1):
+    * instead of a closure-captured Map of every changed auth, each
+    * attached record is joined with exactly ITS relevant struct
+    * changes, so driver state is O(1) regardless of how many auths a
+    * bulk re-heading batch touched; the per-field fold is the one
+    * [[cascadeHeadingChangesBulk]] applies. `changes` columns: (xref,
+    * new_suffix, removed, added) — value-only change rows (null
+    * suffix, empty code deltas) are filtered out here. */
   def cascadeStructJoined(attached: DataFrame, changes: DataFrame)
       : org.apache.spark.sql.Dataset[MarcRow] = {
+    import MarcSchema.marcRowEncoder
+    implicit val inputEnc: org.apache.spark.sql.Encoder[CascadeInput] =
+      org.apache.spark.sql.Encoders.product[CascadeInput]
     val structDim = changes.where(col("new_suffix").isNotNull ||
       size(col("removed")) > 0 || size(col("added")) > 0)
     val recCols = attached.columns.toSeq
@@ -209,17 +157,20 @@ object AuthOps {
       .join(structDim.select(col("xref").as("__x"), col("new_suffix"),
         col("removed"), col("added")), "__x")
       .groupBy(col("__cid"))
-      // sort_array orders by the leading xref field: the same
-      // deterministic ascending application order as the in-list map
-      .agg(sort_array(collect_list(struct(col("__x").as("xref"),
-        col("new_suffix").as("newSuffix"), col("removed"), col("added")))).as("__changes"))
-    // records with no struct change carry a null list from the left
-    // join — cascadeHeadingChangesJoined's null branch handles it
-    val withChanges = attached
+      .agg(collect_list(struct(col("__x").as("xref"),
+        col("new_suffix").as("newSuffix"), col("removed"), col("added"))).as("__changes"))
+    // records with no struct change carry a null list from the left join
+    attached
       .join(perRec, col("_id") === col("__cid"), "left").drop("__cid")
-    cascadeHeadingChangesJoined(
-      withChanges.select(struct(recCols.map(col): _*).as("rec"),
-        col("__changes").as("changes")))
+      .select(struct(recCols.map(col): _*).as("rec"), col("__changes").as("changes"))
+      .as[CascadeInput]
+      .map { ci =>
+        if (ci.changes == null || ci.changes.isEmpty) ci.rec
+        else {
+          val byId = ci.changes.iterator.map(c => c.xref -> c).toMap
+          applyStructChanges(ci.rec, byId.get)
+        }
+      }
   }
 
   /** null out the materialized values of linked subfields so a resolve
@@ -254,8 +205,6 @@ object AuthOps {
       stripLinkedValues(records.toDF()).select(cols.map(col): _*).as[MarcRow], auths)
   }
 
-  /** in_use count for one auth id (dlx/marc/__init__.py:2091-2141):
-    * semi-join shaped existence scan. */
   /** Typeahead over the heading dimension (reference partial_lookup,
     * dlx/marc/__init__.py:1995-2041): case-insensitive containment on
     * the source-tag heading subfield, capped at `limit`. The reference
@@ -321,6 +270,8 @@ object AuthOps {
       .drop("min_xref", "n_exact", "min_exact_xref")
   }
 
+  /** in_use count for one auth id (dlx/marc/__init__.py:2091-2141):
+    * semi-join shaped existence scan. */
   def inUse(records: DataFrame, xref: Long): Long =
     records.where(exists(col("datafields"), f =>
       exists(f.getField("subfields"), s => s.getField("xref") === xref))).count()

@@ -122,48 +122,15 @@ object MarcContext {
       .drop("r_id")
   }
 
-  /** Broadcast-map variant of [[resolveLinked]]: the heading dimension
-    * is collected and broadcast (exactly the reference's
-    * Auth.build_cache, dlx/marc/__init__.py:1841-1874), and values
-    * materialize in ONE narrow map over the typed rows — no shuffle at
-    * all. Preferred while the auth dimension fits executor memory
-    * (dlx's own cache assumption); [[resolveLinked]] is the join path
-    * for an unbounded dimension. */
-  def resolveLinkedBroadcast(records: org.apache.spark.sql.Dataset[MarcRow],
-      auths: DataFrame): org.apache.spark.sql.Dataset[MarcRow] = {
-    import MarcSchema.marcRowEncoder
-    val spark = records.sparkSession
-    val dim: Map[(Long, String), String] = authHeadings(auths)
-      .select("xref", "code", "value").collect()
-      .map(r => (r.getLong(0), r.getString(1)) -> r.getString(2)).toMap
-    val bc = spark.sparkContext.broadcast(dim)
-    records.map { r =>
-      r.copy(datafields = r.datafields.map { f =>
-        f.copy(subfields = f.subfields.map { s =>
-          if (s.xref != null && s.value == null)
-            s.copy(value = bc.value.getOrElse((s.xref.longValue, s.code), null))
-          else s
-        })
-      })
-    }
-  }
-
-  /** Broadcast-map resolution as a pure Column projection: the heading
-    * dimension rides an executor broadcast behind a scalar UDF applied
-    * INSIDE the datafields transform — unlike the typed
-    * [[resolveLinkedBroadcast]] it never pays the MarcRow encoder
-    * round-trip for untouched columns, and unlike [[resolveLinked]] it
-    * never shuffles. The fastest path while the dimension fits
-    * executor memory. */
-  def resolveLinkedMapUdf(records: DataFrame, auths: DataFrame): DataFrame =
-    resolveLinkedMapUdf(records,
-      authHeadings(auths).select("xref", "code", "value").collect()
-        .map(r => (r.getLong(0), r.getString(1)) -> r.getString(2)).toMap)
-
-  /** [[resolveLinkedMapUdf]] with the heading dimension already
-    * collected — lets callers that had to probe the dimension's size
-    * anyway reuse that collect instead of scanning it twice. */
-  def resolveLinkedMapUdf(records: DataFrame, dim: Map[(Long, String), String]): DataFrame = {
+  /** Broadcast-map resolution as a pure Column projection (the
+    * reference's Auth.build_cache, dlx/marc/__init__.py:1841-1874):
+    * the already-collected heading dimension rides an executor
+    * broadcast behind a scalar UDF applied INSIDE the datafields
+    * transform — it never pays a MarcRow encoder round-trip for
+    * untouched columns, and unlike [[resolveLinked]] it never
+    * shuffles. The fastest path while the dimension fits executor
+    * memory. */
+  private def resolveLinkedMapUdf(records: DataFrame, dim: Map[(Long, String), String]): DataFrame = {
     val spark = records.sparkSession
     val bc = spark.sparkContext.broadcast(dim)
     val lookup = udf((xref: java.lang.Long, code: String) =>

@@ -41,8 +41,7 @@ import org.apache.spark.sql.functions._
   * codegen'd, no UDFs on the hot path.
   */
 final class SparkQueryCompiler(spark: SparkSession, bibs: DataFrame, auths: DataFrame,
-    maxResolvedValues: Int = 10000, maxResolvedBytes: Int = 1 << 20,
-    maxResolvedXrefs: Int = 131072) {
+    maxResolvedValues: Int = 10000, maxResolvedXrefs: Int = 131072) {
 
   import MarcContext._
 
@@ -57,15 +56,6 @@ final class SparkQueryCompiler(spark: SparkSession, bibs: DataFrame, auths: Data
 
   def cacheIndexes(): this.type = {
     tagIdx.cache(); browseIdx.cache(); headings.cache(); this
-  }
-
-  /** Index restricted to one tag: prunes the datafields array BEFORE
-    * the explode so a single-tag resolution never shuffles the other
-    * tags' fields (the explode can't see through a post-hoc filter). */
-  private def tagIdxFor(tag: String): DataFrame = {
-    if (tagIdx.storageLevel.useMemory) tagIdx.where(col("tag") === tag)
-    else tagIndex(bibs.unionByName(auths).withColumn("datafields",
-      filter(col("datafields"), f => f.getField("tag") === tag)))
   }
 
   /** One-tag RESOLUTION entries without the index aggregate: the
@@ -281,6 +271,9 @@ final class SparkQueryCompiler(spark: SparkSession, bibs: DataFrame, auths: Data
     if (rows.length > maxResolvedXrefs) XrefFrame(distinctXrefs.select(col("xref").as("mxref")))
     else XrefList(rows.iterator.map(_.getLong(0)).toSeq)
   }
+
+  /** the reference's 1 MB in-list byte cap (dlx/marc/query.py:194-199) */
+  private val maxResolvedBytes = 1 << 20
 
   /** Collect a single-string-column DataFrame unless it exceeds the
     * caps (row-count guard + the reference's 1 MB byte cap);

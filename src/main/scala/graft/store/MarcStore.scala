@@ -29,48 +29,12 @@ import org.apache.spark.sql.functions._
   *      exactly the reference's update_attached_records default.
   */
 final class MarcStore(spark: SparkSession, basePath: String, numBuckets: Int = 64,
-    historyPartitions: Int = 8, lockWaitMs: Long = 600000L,
-    maxChangedAuths: Int = 100000) {
+    lockWaitMs: Long = 600000L, maxChangedAuths: Int = 100000) {
   import spark.implicits._
   import MarcSchema.marcRowEncoder
 
   private def tablePath(recordType: String) = s"$basePath/${recordType}s"
   private def historyPath(recordType: String) = s"$basePath/${recordType}_history"
-
-  /** opt-in phase timing (GRAFT_STORE_PROFILE=1, or the in-process
-    * flag) for tools.ProfileStore / tools.StoreBudget. */
-  private val profile =
-    sys.env.contains("GRAFT_STORE_PROFILE") || MarcStore.forceProfile
-  /** Job counters split by job group (r11 verdict finding #2): the
-    * concurrent history-staging write tags its jobs with
-    * [[MarcStore.historyJobGroup]], so main-thread phases and the
-    * history phase each count exactly their own jobs even though the
-    * two run concurrently inside one commit. */
-  private lazy val profileJobCounters: (java.util.concurrent.atomic.AtomicInteger,
-      java.util.concurrent.atomic.AtomicInteger) = {
-    val main = new java.util.concurrent.atomic.AtomicInteger(0)
-    val hist = new java.util.concurrent.atomic.AtomicInteger(0)
-    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        val g = Option(js.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
-        if (g.contains(MarcStore.historyJobGroup)) hist.incrementAndGet()
-        else main.incrementAndGet()
-      }
-    })
-    (main, hist)
-  }
-  private def timed[A](label: String)(f: => A): A =
-    if (!profile) f
-    else {
-      val j0 = profileJobCounters._1.get()
-      val t0 = System.nanoTime()
-      val r = f
-      val dt = (System.nanoTime() - t0) / 1e9
-      val jobs = profileJobCounters._1.get() - j0
-      println(f"  STORE $label%-22s $dt%7.3f s  jobs=$jobs")
-      MarcStore.profileLog.add((label, dt, jobs))
-      r
-    }
 
   private val canonicalCols = Seq("record_type", "_id", "created", "updated",
     "created_user", "user", "basket", "leader", "controlfields", "datafields",
@@ -167,10 +131,6 @@ final class MarcStore(spark: SparkSession, basePath: String, numBuckets: Int = 6
     recs.filter(col("_id") =!= -1L).unionByName(assigned)
   }
 
-  /** Commit-time auth validation (reference auth_validate,
-    * dlx/marc/__init__.py:890-904): controlled subfields must carry a
-    * resolvable xref; uncontrolled subfields must not carry one. One
-    * join job against the heading dimension. */
   // live-auth heading dimension, persisted per TABLE GENERATION:
   // validation re-derived it per commit otherwise (a nested-explode
   // plan over the full auth table — the round-8 store profile's
@@ -225,29 +185,33 @@ final class MarcStore(spark: SparkSession, basePath: String, numBuckets: Int = 6
         s.getField("xref").isNotNull && array_contains(ck, ckey(f, s))))
   }
 
-  private def authValidate(recs: Dataset[MarcRow], rt: String): Unit = {
+  /** Commit-time auth validation (reference auth_validate,
+    * dlx/marc/__init__.py:890-904): controlled subfields must carry a
+    * resolvable xref; uncontrolled subfields must not carry one. One
+    * join job against the heading dimension. `allRules = false` checks
+    * resolvability only — for a batch the probe already proved free of
+    * stray/missing-xref violations. */
+  private def authValidate(recs: Dataset[MarcRow], rt: String, allRules: Boolean): Unit = {
     val controlledKeys = controlledKeysOf(rt)
     val subs = recs.toDF()
       .select(col("_id"), explode(col("datafields")).as("f"))
       .select(col("_id"), col("f.tag").as("tag"), explode(col("f.subfields")).as("s"))
       .select(col("_id"), col("tag"), col("s.code").as("code"), col("s.xref").as("xref"))
-      .withColumn("ckey", concat(col("tag"), lit("|"), col("code")))
-    val controlled = subs.where(col("ckey").isin(controlledKeys: _*))
-    val uncontrolledWithXref = subs
-      .where(!col("ckey").isin(controlledKeys: _*) && col("xref").isNotNull)
-    // no controlled tags for this record type (the auth config here)
-    // -> nothing can reference a heading, so skip the auth-store scan
-    // entirely; only the stray-xref rule can fire
-    val violations = if (controlledKeys.isEmpty) uncontrolledWithXref
-    else {
-      val missingXref = controlled.where(col("xref").isNull)
-      val headings = liveAuthHeadings
-        .select(col("xref").as("h_xref"), col("code").as("h_code"))
-      val badXref = controlled.where(col("xref").isNotNull)
-        .join(headings, controlled("xref") === headings("h_xref") &&
-          controlled("code") === headings("h_code"), "left_anti")
-      uncontrolledWithXref.unionByName(missingXref).unionByName(badXref)
-    }
+    val isControlled = concat(col("tag"), lit("|"), col("code")).isin(controlledKeys: _*)
+    def badXref = subs.where(isControlled && col("xref").isNotNull)
+      .join(liveAuthHeadings.select(col("xref").as("h_xref"), col("code").as("h_code")),
+        col("xref") === col("h_xref") && col("code") === col("h_code"), "left_anti")
+    val violations =
+      if (!allRules) badXref
+      else {
+        val stray = subs.where(!isControlled && col("xref").isNotNull)
+        // no controlled tags for this record type (the auth config
+        // here) -> nothing can reference a heading, so skip the
+        // auth-store scan entirely; only the stray-xref rule can fire
+        if (controlledKeys.isEmpty) stray
+        else stray.unionByName(subs.where(isControlled && col("xref").isNull))
+          .unionByName(badXref)
+      }
     // ONE deterministic job for the (overwhelmingly common) all-valid
     // case: a full count scans exactly what an early-exit limit(1)
     // would have scanned when it finds nothing, without the limit's
@@ -256,29 +220,6 @@ final class MarcStore(spark: SparkSession, basePath: String, numBuckets: Int = 6
     // violation path.
     if (violations.count() > 0L) {
       val r = violations.limit(1).collect().head
-      throw new IllegalArgumentException(
-        s"Auth validation failed for $rt ${r.getAs[Long]("_id")} " +
-          s"${r.getAs[String]("tag")}$$${r.getAs[String]("code")} xref=${r.getAs[Any]("xref")}")
-    }
-  }
-
-  /** Resolvability-only validation — the probe already proved the
-    * batch free of stray/missing-xref violations, so only the
-    * controlled-xref anti-join against the live heading dimension can
-    * still fire. Same violation predicate and error shape as
-    * [[authValidate]]'s badXref branch. */
-  private def authValidateXrefsOnly(recs: Dataset[MarcRow], rt: String): Unit = {
-    val controlledKeys = controlledKeysOf(rt)
-    val bad = recs.toDF()
-      .select(col("_id"), explode(col("datafields")).as("f"))
-      .select(col("_id"), col("f.tag").as("tag"), explode(col("f.subfields")).as("s"))
-      .select(col("_id"), col("tag"), col("s.code").as("code"), col("s.xref").as("xref"))
-      .where(concat(col("tag"), lit("|"), col("code")).isin(controlledKeys: _*) &&
-        col("xref").isNotNull)
-      .join(liveAuthHeadings.select(col("xref").as("h_xref"), col("code").as("h_code")),
-        col("xref") === col("h_xref") && col("code") === col("h_code"), "left_anti")
-    if (bad.count() > 0L) {
-      val r = bad.limit(1).collect().head
       throw new IllegalArgumentException(
         s"Auth validation failed for $rt ${r.getAs[Long]("_id")} " +
           s"${r.getAs[String]("tag")}$$${r.getAs[String]("code")} xref=${r.getAs[Any]("xref")}")
@@ -309,28 +250,34 @@ final class MarcStore(spark: SparkSession, basePath: String, numBuckets: Int = 6
     // aggregate cannot see, so that path falls back to a post-
     // assignment collect.
     val baseCols = Seq(
-      first(col("record_type")).as("rt"),
+      min(col("record_type")).as("rt"),
+      max(col("record_type")).as("rt_max"),
       count(when(col("_id") === -1L, lit(1))).as("need_ids"),
       collect_set(pmod(col("_id"), lit(numBuckets.toLong))).as("buckets")) ++
       (if (authCheck) violationProbeCols else Seq.empty)
-    val stats = timed("stats_agg") {
-      recsCk.toDF().agg(count(lit(1)).as("n"), baseCols: _*).head() }
+    val stats = recsCk.toDF().agg(count(lit(1)).as("n"), baseCols: _*).head()
     if (stats.getAs[Long]("n") == 0L) return
     val rt = stats.getAs[String]("rt")
-    if (authCheck) timed("auth_validate") {
+    // the batch is written to ONE table and validated under ONE record
+    // type's rules, so a mixed batch is refused before anything runs
+    if (rt != stats.getAs[String]("rt_max"))
+      throw new IllegalArgumentException(
+        s"Commit batch mixes record types ($rt, ${stats.getAs[String]("rt_max")}): " +
+          "commit each record type separately")
+    if (authCheck) {
       // probe-directed (round 14): a batch with no violation candidates
       // at all skips the validation job; a clean-but-xref-carrying
       // batch pays only the resolvability anti-join; any local
       // violation runs the full pipeline for its sample row (throws).
       if (stats.getAs[Long]("v_stray") == 1L || stats.getAs[Long]("v_missing") == 1L)
-        authValidate(recsCk, rt)
+        authValidate(recsCk, rt, allRules = true)
       else if (stats.getAs[Long]("v_ctrl_xref") == 1L)
-        authValidateXrefsOnly(recsCk, rt)
+        authValidate(recsCk, rt, allRules = false)
     }
     val needIds = stats.getAs[Long]("need_ids")
-    val incomingRaw = timed("assign_ids") { assignIds(recsCk, rt, needIds) }
+    val incomingRaw = assignIds(recsCk, rt, needIds)
     val knownTouched =
-      if (needIds == 0L) Some(stats.getSeq[Long](3)) else None
+      if (needIds == 0L) Some(stats.getSeq[Long](stats.fieldIndex("buckets"))) else None
     commitPrepared(incomingRaw, user, now, rt, updateAttached, knownTouched, action)
   }
 
@@ -376,15 +323,13 @@ final class MarcStore(spark: SparkSession, basePath: String, numBuckets: Int = 6
     val pendingCascade: Option[Either[Array[org.apache.spark.sql.Row], DataFrame]] =
       if (rt == "auth" && updateAttached) {
         val changes = headingChanges(incoming.toDF())
-        val head = timed("changes_collect") { changes.limit(maxChangedAuths + 1).collect() }
+        val head = changes.limit(maxChangedAuths + 1).collect()
         if (head.length <= maxChangedAuths) Some(Left(head))
-        else Some(Right(timed("changes_checkpoint") { changes.localCheckpoint(true) }))
+        else Some(Right(changes.localCheckpoint(true)))
       } else None
 
-    timed("write_live") {
-      writeLiveBuckets(incoming.toDF(), rt, knownTouched,
-        history = Some((versionedHistory(incoming.toDF(), rt, action, now), historyPath(rt))))
-    }
+    writeLiveBuckets(incoming.toDF(), rt, knownTouched,
+      history = Some((versionedHistory(incoming.toDF(), rt, action, now), historyPath(rt))))
 
     pendingCascade match {
       case Some(Left(rows)) if rows.nonEmpty => cascadeToAttached(rows, user, now)
@@ -436,7 +381,7 @@ final class MarcStore(spark: SparkSession, basePath: String, numBuckets: Int = 6
     val path = tablePath(recordType)
     val withBucket = incoming.withColumn("id_bucket", pmod(col("_id"), lit(numBuckets.toLong)))
     val touched = knownTouched.getOrElse(
-      timed("touched_collect") { withBucket.select("id_bucket").distinct().as[Long].collect().toSeq })
+      withBucket.select("id_bucket").distinct().as[Long].collect().toSeq)
     val survivors = readRaw(recordType)
       .where(col("id_bucket").isin(touched: _*)) // partition-pruned scan
       .join(incoming.select(col("_id").as("i_id")), col("_id") === col("i_id"), "left_anti")
@@ -479,42 +424,25 @@ final class MarcStore(spark: SparkSession, basePath: String, numBuckets: Int = 6
     // strictly before any rename). The two staging writes read
     // DISJOINT state (live buckets vs prior history, plus the pinned
     // batch), so they run CONCURRENTLY — a commit pays max(), not
-    // sum(), of the two walls (StoreBudget: ~0.3-0.9 s per commit).
-    // The staging thread tags its jobs with a JOB GROUP so profiling
-    // attributes them exactly (r11 verdict finding #2).
-    val histJobs0 = if (profile) profileJobCounters._2.get() else 0
+    // sum(), of the two walls.
     val histStaged = history.map { case (rows, hPath) =>
       rmDir(new java.io.File(hPath + "_staging"))
       scala.concurrent.Future {
-        spark.sparkContext.setJobGroup(MarcStore.historyJobGroup, "history staging", false)
-        try rows.coalesce(historyPartitions)
-          .write.mode(SaveMode.Overwrite).parquet(hPath + "_staging")
-        finally spark.sparkContext.clearJobGroup()
+        // coalesce bounds files per history append
+        rows.coalesce(8).write.mode(SaveMode.Overwrite).parquet(hPath + "_staging")
       }(MarcStore.stagingEc)
     }
     def awaitHist(): Unit = histStaged.foreach(f =>
       scala.concurrent.Await.result(f, scala.concurrent.duration.Duration.Inf))
-    try timed("staging_write") { replacement.repartition(math.max(touched.size, 1), col("id_bucket"))
-      .write.partitionBy("id_bucket").mode(SaveMode.Overwrite).parquet(staging) }
+    try replacement.repartition(math.max(touched.size, 1), col("id_bucket"))
+      .write.partitionBy("id_bucket").mode(SaveMode.Overwrite).parquet(staging)
     catch { case e: Throwable =>
       // never leave an in-flight history write racing the cleanup a
       // failed swap triggers — drain it (ignoring its own failure)
       try awaitHist() catch { case _: Throwable => () }
       throw e
     }
-    // history_stage profile row: wall = the wait REMAINDER beyond the
-    // bucket staging (its marginal contribution to commit latency —
-    // phases partition the commit timeline, so per-op phase walls sum
-    // to <= the op wall); jobs = EXACT via the history job group, over
-    // the phase's whole concurrent life, not just the remainder window.
-    if (profile && histStaged.isDefined) {
-      val t0 = System.nanoTime()
-      awaitHist()
-      val dt = (System.nanoTime() - t0) / 1e9
-      val jobs = profileJobCounters._2.get() - histJobs0
-      println(f"  STORE history_stage        $dt%7.3f s  jobs=$jobs (group-attributed)")
-      MarcStore.profileLog.add(("history_stage", dt, jobs))
-    } else awaitHist()
+    awaitHist()
     maybeCrash("post_staging")
     SwapJournal.write(staging, touched.map(b =>
       s"$b,${if (new java.io.File(s"$staging/id_bucket=$b").exists()) 1 else 0}") :+
@@ -674,8 +602,8 @@ final class MarcStore(spark: SparkSession, basePath: String, numBuckets: Int = 6
       val removed = r.getSeq[String](2)
       val added = r.getSeq[String](3)
       if (sfx.isEmpty && removed.isEmpty && added.isEmpty) None
-      else Some(r.getLong(0) -> AuthOps.HeadingStructChange(sfx, removed.toSet, added.toSeq))
-    }.toMap
+      else Some(AuthOps.HeadingStructChange(r.getLong(0), sfx, removed, added))
+    }.toSeq
     // the reference's auth_linked_update_log debug rows
     // (dlx/marc/__init__.py:1205): one row per (attached record,
     // triggering auth) pair. Appended BEFORE the re-commit so the scan
@@ -870,14 +798,10 @@ final class MarcStore(spark: SparkSession, basePath: String, numBuckets: Int = 6
     val survivors = readRaw(recordType)
       .where(col("id_bucket").isin(buckets: _*) && !coalesce(predicate, lit(false)))
     // a bucket whose rows were all deleted has no staging dir and
-    // swapBuckets removes it outright. timed under the same
-    // "write_live" label as the commit path so StoreBudget's nested
-    // phases (staging_write/history_stage) always have their parent
-    timed("write_live") {
-      swapBuckets(path, survivors, buckets,
-        history = Some((versionedHistory(deleted, recordType, "deleted", now),
-          historyPath(recordType))))
-    }
+    // swapBuckets removes it outright
+    swapBuckets(path, survivors, buckets,
+      history = Some((versionedHistory(deleted, recordType, "deleted", now),
+        historyPath(recordType))))
   }
 
   /** Recreate the last history version of a deleted record
@@ -991,17 +915,6 @@ object MarcStore {
   @volatile var failpoint: Option[String] = None
   final class CrashInjected(point: String)
     extends RuntimeException(s"injected crash at $point")
-
-  /** In-process twin of GRAFT_STORE_PROFILE (tools.StoreBudget flips
-    * it before constructing its stores); phase rows accumulate in
-    * [[profileLog]] as (label, seconds, spark jobs). */
-  @volatile var forceProfile: Boolean = false
-  val profileLog = new java.util.concurrent.ConcurrentLinkedQueue[(String, Double, Int)]()
-
-  /** Job-group id the concurrent history-staging thread tags its Spark
-    * jobs with, so profiling listeners attribute them exactly even
-    * while they overlap the main thread's bucket staging. */
-  val historyJobGroup = "marcstore-history-staging"
 
   /** One shared daemon thread for the concurrent history-staging
     * write (a commit runs at most one; the pool exists so Spark jobs

@@ -19,10 +19,9 @@ package graft.tools
   * BENCH/PLANS_real_x10/x30 (RealBench), BENCH_realmarc_r0N
   * (RealMarcBench verified walls over the scaled Zipfian authority
   * dimension), BENCH_isolated_r0N (IsolatedBench fresh-JVM walls),
-  * BENCH_store_profile.json (StoreBudget per-commit fixed-cost
-  * breakdown for the store-family walls), and the three cross-process
-  * StoreStress gates: BENCH_contention.json (disjoint-id two-JVM
-  * writer race), BENCH_contention_crash.json (one writer dies
+  * and the three cross-process StoreStress gates:
+  * BENCH_contention.json (disjoint-id two-JVM writer race),
+  * BENCH_contention_crash.json (one writer dies
   * mid-swap, the other recovers it), BENCH_contention_overlap.json
   * (both JVMs commit the SAME id slice — last-wins + dense
   * interleaved history). The x100 probes and the ScaleBench
@@ -48,7 +47,6 @@ object RoundArtifacts {
     // bloats; the in-JVM families are insensitive to ordering.
     val fails = IsolatedBench.run(Array(round)) ++ FuzzBench.run(Array(round)) ++
       RealBench.run(Array(round)) ++ RealMarcBench.run(Array(round)) ++
-      StoreBudget.run(Array.empty) ++
       // cross-process writer contention (r11 verdict #5): two child
       // JVMs race disjoint batches onto one store path
       StoreStress.contentionRun(Array.empty) ++
@@ -69,7 +67,7 @@ object RoundArtifacts {
       s"BENCH_fuzz_$round.json", "BENCH_fuzz_fb_x30.json",
       "BENCH_real_x10.json", "BENCH_real_x30.json", s"BENCH_real_$round.json",
       s"BENCH_realmarc_$round.json", s"BENCH_isolated_$round.json",
-      "BENCH_store_profile.json", "BENCH_contention.json",
+      "BENCH_contention.json",
       "BENCH_contention_crash.json", "BENCH_contention_overlap.json",
       "PLANS_fuzz_x10.md", "PLANS_fuzz_x30.md", "PLANS_fuzz_fb_x30.md",
       "PLANS_real_x10.md", "PLANS_real_x30.md")

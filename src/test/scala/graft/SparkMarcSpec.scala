@@ -212,15 +212,6 @@ class SparkMarcSpec extends AnyFunSuite {
     assert(xrefs == Set(2L))
   }
 
-  test("retag attached on heading tag change") {
-    val retagged = AuthOps.retagAttached(bibsDs.toDF(), authId = 1L, newHeadingTag = "151")
-    val tags = retagged.where(col("_id") === 1L)
-      .select(explode(col("datafields")).as("f")).select("f.tag")
-      .collect().map(_.getString(0)).toSet
-    assert(tags.contains("651")) // 650 -> 651
-    assert(tags.contains("710")) // untouched (different xref)
-  }
-
   test("full heading-change cascade: retag + drop + add subfields") {
     // auth 1 heading moves 150$a -> 151 with $a removed, $z added
     val cascaded = AuthOps.cascadeHeadingChange(bibsDs.toDF(), authId = 1L,
@@ -240,6 +231,23 @@ class SparkMarcSpec extends AnyFunSuite {
     assert(tags.contains("710"))
   }
 
+  test("retag attached on heading tag change") {
+    // tag move with unchanged codes: a pure retag, subfields untouched
+    val retagged = AuthOps.cascadeHeadingChange(bibsDs.toDF(), authId = 1L,
+      oldHeadingTag = "150", oldCodes = Seq("a"),
+      newHeadingTag = "151", newCodes = Seq("a"))
+    val retaggedFields = retagged.where(col("_id") === 1L)
+      .select(explode(col("datafields")).as("f")).collect().map(_.getStruct(0))
+    val retaggedTags = retaggedFields.map(_.getString(0)).toSet
+    assert(retaggedTags.contains("651")) // 650 -> 651
+    assert(!retaggedTags.contains("650"))
+    assert(retaggedTags.contains("710")) // untouched (different xref)
+    val origSubs = bibsDs.toDF().where(col("_id") === 1L)
+      .select(explode(col("datafields")).as("f")).where(col("f.tag") === "650")
+      .select(col("f.subfields")).head().get(0)
+    assert(retaggedFields.find(_.getString(0) == "651").get.get(3) == origSubs)
+  }
+
   test("cascadeHeadingChangesBulk matches the single-auth cascade") {
     import MarcSchema.marcRowEncoder
     val single = AuthOps.cascadeHeadingChange(bibsDs.toDF(), authId = 1L,
@@ -247,7 +255,7 @@ class SparkMarcSpec extends AnyFunSuite {
         newHeadingTag = "151", newCodes = Seq("z"))
       .select(bibsDs.columns.map(col): _*).as[MarcRow]
     val bulk = AuthOps.cascadeHeadingChangesBulk(bibsDs,
-      Map(1L -> AuthOps.HeadingStructChange(Some("51"), Set("a"), Seq("z"))))
+      Seq(AuthOps.HeadingStructChange(1L, Some("51"), Seq("a"), Seq("z"))))
     val s = single.collect().map(r => r._id -> r.datafields).toMap
     val b = bulk.collect().map(r => r._id -> r.datafields).toMap
     assert(b == s)
@@ -258,15 +266,15 @@ class SparkMarcSpec extends AnyFunSuite {
     // changed auth — 500 changed headings meant a 500-deep plan and
     // Catalyst analysis/codegen blowup before data size mattered
     val changes = (1L to 500L)
-      .map(i => i -> AuthOps.HeadingStructChange(Some("51"), Set.empty[String], Nil)).toMap
+      .map(i => AuthOps.HeadingStructChange(i, Some("51"), Nil, Nil))
     val out = AuthOps.cascadeHeadingChangesBulk(bibsDs, changes)
     val planLines = out.queryExecution.analyzed.toString.linesIterator.size
     assert(planLines < 40, s"plan depth $planLines lines — per-auth chaining returned?")
   }
 
-  test("bulk heading retag: 500 changed auths cascade in one commit batch") {
-    val dir = java.nio.file.Files.createTempDirectory("marcstore_bulk").toString
-    val store = new graft.store.MarcStore(spark, dir)
+  /** Commit 500 auths + 500 attached bibs, then re-head every auth
+    * 150 -> 151 in one batch and check the cascade reached every bib. */
+  private def bulkRetagCascade(store: graft.store.MarcStore): Unit = {
     val n = 500
     val auths = (1 to n).map(i =>
       MarcRecord(recordType = "auth", id = Some(i.toLong)).set("150", "a", s"Heading $i"))
@@ -288,6 +296,19 @@ class SparkMarcSpec extends AnyFunSuite {
     assert(b7.datafields.find(_.tag == "651").get.subfields
       .find(_.code == "a").get.value == "Heading 7")
     assert(store.readHistory("bib").where(col("_id") === 7L).count() == 2L)
+  }
+
+  test("bulk heading retag: 500 changed auths cascade in one commit batch") {
+    val dir = java.nio.file.Files.createTempDirectory("marcstore_bulk").toString
+    bulkRetagCascade(new graft.store.MarcStore(spark, dir))
+  }
+
+  test("bulk heading retag past the change cap: the joined cascade, same result") {
+    // maxChangedAuths = 0 sends every heading change through the
+    // over-cap regime (flag-join attach scan + per-record joined
+    // struct changes) instead of the collected broadcast map
+    val dir = java.nio.file.Files.createTempDirectory("marcstore_bulk_joined").toString
+    bulkRetagCascade(new graft.store.MarcStore(spark, dir, maxChangedAuths = 0))
   }
 
   test("auth use counts") {
@@ -368,6 +389,18 @@ class SparkMarcSpec extends AnyFunSuite {
         DataField("245", " ", " ", Vector(Subfield("a", Some("Clean"))))))))
     store.commit(cleanRec, user = "t", authCheck = true)
     assert(store.read("bib").where(col("_id") === 10L).count() == 1)
+    // a batch mixing record types is refused outright: it would land in
+    // one table and be validated under one type's rules
+    val bibsBefore = store.read("bib").collect().toSet
+    val authsBefore = store.read("auth").collect().toSet
+    val mixed = MarcSchema.toDataset(spark, Seq(
+      MarcRecord(recordType = "bib", id = Some(11L)).set("245", "a", "Mixed"),
+      MarcRecord(recordType = "auth", id = Some(12L)).set("150", "a", "Mixed heading")))
+    intercept[IllegalArgumentException] {
+      store.commit(mixed, user = "t", authCheck = true)
+    }
+    assert(store.read("bib").collect().toSet == bibsBefore)
+    assert(store.read("auth").collect().toSet == authsBefore)
   }
 
   test("history queries: from_query, find_deleted, deleted_by_date (test_marc.py:1122-1146)") {
