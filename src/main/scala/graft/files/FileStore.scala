@@ -114,17 +114,9 @@ final class FileStore(spark: SparkSession, basePath: String, blobs: BlobStore,
   private def bucketCol: org.apache.spark.sql.Column =
     pmod(conv(substring(col("_id"), 1, 4), 16, 10).cast("long"), lit(numBuckets.toLong))
 
-  private def hasParquet(path: String): Boolean = {
-    def walk(f: java.io.File): Boolean =
-      if (f.isDirectory) { val fs = f.listFiles(); fs != null && fs.exists(walk) }
-      else f.getName.endsWith(".parquet")
-    val d = new java.io.File(path)
-    d.exists() && walk(d)
-  }
-
   /** One read plan per table generation (same rationale as MarcStore:
-    * `spark.read.parquet` re-lists the bucketed dir tree on every
-    * call); invalidated by any same-JVM store's write via the shared
+    * built by [[graft.store.StoreTables.read]], reused until the next
+    * write); invalidated by any same-JVM store's write via the shared
     * [[graft.store.TableGenerations]]. */
   private var cached: Option[(Long, DataFrame)] = None
 
@@ -133,10 +125,8 @@ final class FileStore(spark: SparkSession, basePath: String, blobs: BlobStore,
     cached match {
       case Some((g, df)) if g == gen => df
       case _ =>
-        val df =
-          if (!hasParquet(tablePath))
-            spark.emptyDataset[FileRecord].toDF().withColumn("id_bucket", lit(0L)).limit(0)
-          else spark.read.parquet(tablePath)
+        val empty = spark.emptyDataset[FileRecord].toDF().withColumn("id_bucket", lit(0L)).limit(0)
+        val df = graft.store.StoreTables.read(spark, tablePath, empty.schema).getOrElse(empty)
         cached = Some((gen, df))
         df
     }

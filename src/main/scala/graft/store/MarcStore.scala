@@ -11,11 +11,15 @@ import org.apache.spark.sql.functions._
   * Layout (designed for 100 TB — see SCALING.md):
   *  - live tables are parquet partitioned by `id_bucket`
   *    (pmod(_id, numBuckets)): a commit rewrites ONLY the buckets its
-  *    batch touches (dynamic partition overwrite), so write cost is
-  *    O(touched buckets), never O(table);
-  *  - history is append-only: each commit/delete APPENDS one row per
-  *    version (SaveMode.Append) — no rewrite amplification; version
-  *    numbers come from a read-only count over the batch's ids.
+  *    batch touches (staged, then swapped in by rename), so write cost
+  *    is O(touched buckets), never O(table);
+  *  - history is append-only: each commit/delete adds one row per
+  *    version, staged next to the buckets and promoted under the same
+  *    swap journal — no rewrite amplification; version numbers come
+  *    from a read-only count over the batch's ids;
+  *  - a read plan lists the table's files on the driver and carries
+  *    the schema the store writes ([[StoreTables]]): building it starts
+  *    no Spark job.
   *
   * One commit batch = one deterministic job:
   *   1. assign ids to new records (max_id + dense zipWithIndex — the
@@ -40,26 +44,17 @@ final class MarcStore(spark: SparkSession, basePath: String, numBuckets: Int = 6
     "created_user", "user", "basket", "leader", "controlfields", "datafields",
     "text", "words", "logical")
 
-  /** a delete can empty every bucket, leaving a dir with no parquet
-    * files — schema inference would fail on it. */
-  private def hasParquet(path: String): Boolean = {
-    def walk(f: java.io.File): Boolean =
-      if (f.isDirectory) { val fs = f.listFiles(); fs != null && fs.exists(walk) }
-      else f.getName.endsWith(".parquet")
-    val d = new java.io.File(path)
-    d.exists() && walk(d)
-  }
-
-  /** One DataFrame per table GENERATION: `spark.read.parquet` lists the
-    * directory tree eagerly at plan-creation time (a Spark job once the
-    * dir count passes parallelPartitionDiscovery.threshold — the
-    * 64-bucket live table does), so re-reading the same unchanged table
-    * several times inside one commit (prev-audit join, survivor scan,
-    * cascade attach scan) would re-list it each time. A cached plan
-    * stays valid until the table's next write; the generation counter
-    * lives in the companion so every MarcStore instance in the JVM on
-    * the same path sees the invalidation (writes from OUTSIDE the JVM
-    * are out of scope — the store is the table's writer). */
+  /** One DataFrame per table GENERATION: a plan built once is reused
+    * by every read of the same unchanged table inside and across
+    * commits (prev-audit join, survivor scan, cascade attach scan,
+    * read-after-write searches) until the table's next write. Building
+    * it lists the table's files on the driver ([[StoreTables.read]]),
+    * so a fresh generation costs a directory walk, not a Spark job. The
+    * generation counter lives in the companion so every MarcStore
+    * instance in the JVM on the same path sees the invalidation
+    * (writes from OUTSIDE the JVM are out of scope — the store is the
+    * table's writer). `empty` is the plan of a table with no data file
+    * and supplies the schema the store writes. */
   private val dfCache = scala.collection.mutable.Map.empty[String, (Long, DataFrame)]
 
   private def cachedPlan(path: String)(empty: => DataFrame): DataFrame = synchronized {
@@ -67,7 +62,8 @@ final class MarcStore(spark: SparkSession, basePath: String, numBuckets: Int = 6
     dfCache.get(path) match {
       case Some((g, df)) if g == gen => df
       case _ =>
-        val df = if (!hasParquet(path)) empty else spark.read.parquet(path)
+        val e = empty
+        val df = StoreTables.read(spark, path, e.schema).getOrElse(e)
         dfCache(path) = (gen, df)
         df
     }
@@ -76,12 +72,17 @@ final class MarcStore(spark: SparkSession, basePath: String, numBuckets: Int = 6
   private def invalidate(path: String): Unit = synchronized {
     MarcStore.bumpGeneration(path)
     dfCache.remove(path)
+    // the persisted heading dimension reads the old auth generation:
+    // drop it now, or refreshByPath would re-list and recache it only
+    // for liveAuthHeadings to discard it on its next access
+    if (new java.io.File(path) == new java.io.File(tablePath("auth"))) dropHeadings()
     spark.catalog.refreshByPath(path)
   }
 
   /** live table with the physical id_bucket column (partition pruning
-    * happens on filters against it). */
-  private def readRaw(recordType: String): DataFrame =
+    * happens on filters against it); package-visible for the read
+    * parity spec. */
+  private[graft] def readRaw(recordType: String): DataFrame =
     cachedPlan(tablePath(recordType)) {
       spark.emptyDataset[MarcRow].toDF().withColumn("id_bucket", lit(0L)).limit(0)
     }
@@ -143,12 +144,16 @@ final class MarcStore(spark: SparkSession, basePath: String, numBuckets: Int = 6
   private def liveAuthHeadings: DataFrame = {
     val gen = MarcStore.generation(tablePath("auth"))
     headingsCache.getOrElse(gen, {
-      headingsCache.values.foreach(df => try df.unpersist() catch { case _: Throwable => () })
-      headingsCache.clear()
+      dropHeadings()
       val df = MarcContext.authHeadings(read("auth").toDF()).persist()
       headingsCache.put(gen, df)
       df
     })
+  }
+
+  private def dropHeadings(): Unit = {
+    headingsCache.values.foreach(df => try df.unpersist() catch { case _: Throwable => () })
+    headingsCache.clear()
   }
 
   private def controlledKeysOf(rt: String): Seq[String] =

@@ -603,6 +603,62 @@ class SparkMarcSpec extends AnyFunSuite {
     assert(marker.getAs[String]("user") == "bob")
   }
 
+  /** Stage names of the Spark jobs `f` starts. Listener events arrive
+    * asynchronously, so a marker job run after `f` flushes them: its
+    * start event is delivered after every earlier job's. */
+  private def jobsDuring(f: => Unit): Seq[String] = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val marker = "jobs-during-marker"
+    val names = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val markerSeen = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.job.description") == marker))
+          markerSeen.countDown()
+        else names.add(e.stageInfos.map(_.name).mkString("; "))
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      f
+      sc.setJobDescription(marker)
+      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
+      assert(markerSeen.await(60, java.util.concurrent.TimeUnit.SECONDS))
+    } finally sc.removeSparkListener(listener)
+    names.toArray(Array.empty[String]).toSeq
+  }
+
+  test("store reads of a new table generation start no Spark job") {
+    val dir = java.nio.file.Files.createTempDirectory("marcstore_jobs").toString
+    val store = new graft.store.MarcStore(spark, dir)
+    // 40 auths fill 40 bucket dirs: more than Spark's 32-path threshold
+    // for a parallel listing job
+    val auths = (1L to 40L).map(i => MarcRecord(recordType = "auth", id = Some(i))
+      .set("150", "a", s"Heading $i"))
+    store.commit(MarcSchema.toDataset(spark, auths), user = "t")
+    val bib = MarcRecord(recordType = "bib", id = Some(1L))
+      .set("245", "a", "Title").setXref("650", "a", 1L)
+    // the xref is validated against the persisted heading dimension
+    store.commit(MarcSchema.toDataset(spark, Seq(bib)), user = "t")
+    val fresh = new graft.store.MarcStore(spark, dir)
+    val reads = jobsDuring {
+      fresh.read("bib")
+      fresh.read("auth")
+      fresh.readHistory("bib")
+    }
+    assert(reads.isEmpty, s"reads started jobs: $reads")
+    // a heading change invalidates the auth table: the persisted heading
+    // dimension of the old generation is dropped, not re-listed
+    val change = jobsDuring {
+      store.commit(MarcSchema.toDataset(spark, Seq(auths.head.set("150", "a", "Renamed"))),
+        user = "t")
+    }
+    assert(change.nonEmpty)
+    assert(!change.exists(_.contains("refreshByPath")), s"refresh jobs: $change")
+    assert(store.read("bib").head().datafields.exists(
+      _.subfields.exists(_.value == "Renamed")))
+  }
+
   test("connected components: empty pair set yields empty labels") {
     import spark.implicits._
     val empty = Seq.empty[(Long, Long)].toDF("doc_a", "doc_b")

@@ -10,10 +10,6 @@ object SparkTestSession {
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
-      // store tables are bucket-partitioned dirs (64 buckets > the
-      // 32-path default): list them on the driver instead of paying a
-      // Spark job per table read
-      .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "128")
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
     s
