@@ -13,10 +13,12 @@ import org.apache.spark.sql.functions._
   *    broadcast, never a fact-table shuffle.
   *  - [[resolveLinked]]: materializes linked subfield values record-
   *    wide (Auth.lookup per subfield becomes ONE broadcast join).
+  *  - [[tagPostings]]: the posting frame behind the per-tag indexes —
+  *    one (record_type, _id, tag, subfields, words) row per datafield.
   *  - [[tagIndex]]: the `_index_<tag>` collections
   *    (dlx/scripts/build_text_collections.py:48-121) as one
-  *    DataFrame: explode datafields -> field text -> group by
-  *    (tag, text) with collected subfield sets + tokenized words.
+  *    DataFrame: the postings grouped by (tag, field text) with
+  *    collected subfield sets + tokenized words.
   *  - [[browseIndex]]: the `_index_<logical field>` collections
   *    (dlx/scripts/build_logical_fields.py:84-102).
   *
@@ -176,29 +178,46 @@ object MarcContext {
       resolveLinked(records.toDF(), auths).select(cols.map(col): _*).as[MarcRow]
   }
 
-  /** Field-level text of each datafield (resolved values assumed):
-    * space-joined subfield values (dlx/marc/__init__.py:921). */
-  private def fieldTextCol(f: Column): Column =
-    concat_ws(" ", transform(f.getField("subfields"),
-      s => coalesce(s.getField("value"), lit(""))))
+  /** Field-level text of a datafield's subfields (resolved values
+    * assumed): space-joined subfield values (dlx/marc/__init__.py:921). */
+  def fieldTextCol(subfields: Column): Column =
+    concat_ws(" ", transform(subfields, s => coalesce(s.getField("value"), lit(""))))
+
+  /** Padded scrubbed text of a field's raw text: the phrase-match form. */
+  def fieldPaddedText(raw: Column): Column = concat(lit(" "), scrubUdf(raw), lit(" "))
+
+  private def fieldWords(raw: Column): Column = array_distinct(tokenizeUdf(raw))
+
+  /** The posting frame behind the `_index_<tag>` family: one row per
+    * (record, datafield) — (record_type, _id, tag, subfields, distinct
+    * stemmed words). The field text is not stored: it is a pure
+    * function of `subfields` ([[fieldTextCol]]). `tag = Some(t)` prunes
+    * `datafields` to `t` before the explode, so the generate never
+    * materializes the other tags' fields. */
+  def tagPostings(records: DataFrame, tag: Option[String] = None): DataFrame = {
+    val fields = tag.fold(col("datafields"))(t => filter(col("datafields"), f => f.getField("tag") === t))
+    records
+      .select(col("record_type"), col("_id"), explode(fields).as("f"))
+      .select(col("record_type"), col("_id"), col("f.tag").as("tag"), col("f.subfields").as("subfields"),
+        fieldWords(fieldTextCol(col("f.subfields"))).as("words"))
+  }
 
   /** The `_index_<tag>` family as one DataFrame:
-    * (tag, raw text, padded scrubbed text, stemmed words, subfield
-    * (code, value) set). Hash-aggregation on (tag, text) — map-side
-    * combine, no skew (text keys are near-unique). */
-  def tagIndex(recordsResolved: DataFrame): DataFrame = {
-    val fields = recordsResolved
-      .select(explode(col("datafields")).as("f"))
-      .select(col("f.tag").as("tag"), fieldTextCol(col("f")).as("raw"),
-        col("f.subfields").as("subfields"))
-    fields
-      .select(col("tag"), col("raw"), explode(col("subfields")).as("s"))
+    * (tag, raw text, subfield (code, value) set, padded scrubbed text,
+    * stemmed words) — the groupBy(tag, raw) projection of the posting
+    * frame. Hash-aggregation on (tag, raw) — map-side combine, no skew
+    * (text keys are near-unique). */
+  def tagIndex(recordsResolved: DataFrame): DataFrame = tagIndexOf(tagPostings(recordsResolved))
+
+  /** [[tagIndex]] over an already-built posting frame. */
+  def tagIndexOf(postings: DataFrame): DataFrame =
+    postings
+      .select(col("tag"), fieldTextCol(col("subfields")).as("raw"), explode(col("subfields")).as("s"))
       .where(col("s.value").isNotNull)
       .groupBy("tag", "raw")
       .agg(collect_set(struct(col("s.code").as("code"), col("s.value").as("value"))).as("subfields"))
-      .withColumn("text", concat(lit(" "), scrubUdf(col("raw")), lit(" ")))
-      .withColumn("words", array_distinct(tokenizeUdf(col("raw"))))
-  }
+      .withColumn("text", fieldPaddedText(col("raw")))
+      .withColumn("words", fieldWords(col("raw")))
 
   /** The `_index_<logical field>` family: (field, value, padded
     * scrubbed text, words, record types). */

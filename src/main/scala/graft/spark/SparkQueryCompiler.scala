@@ -14,12 +14,15 @@ import org.apache.spark.sql.functions._
   * Where the reference performs parse-time database reads
   * (dlx/marc/query.py:137-199: resolve text/regex terms against
   * `_index_<tag>`, auth values against `auths`), this compiler
-  * resolves against the tagIndex/browseIndex/authHeadings DataFrames.
+  * resolves against the tag posting frame (MarcContext.tagPostings)
+  * and the browseIndex/authHeadings DataFrames.
   *
   * Execution strategy (SCALING.md):
   *  - `run` routes top-level positive text/regex conditions through
-  *    LEFT SEMI joins against the index DataFrames — never a driver
-  *    materialization, so an arbitrarily broad term is safe at 100 TB.
+  *    a two-step lookup on the tag's postings — matched values, then
+  *    the ids of postings carrying them — and one LEFT SEMI join of
+  *    the records on `_id`: the matches are never collected, so an
+  *    arbitrarily broad term is safe at 100 TB.
   *  - Conditions that must become Column predicates (nested in OR,
   *    negated, logical-field text/regex) resolve to `isin` in-lists
   *    capped at the reference's limit (dlx/marc/query.py:194-199).
@@ -47,37 +50,43 @@ final class SparkQueryCompiler(spark: SparkSession, bibs: DataFrame, auths: Data
 
   MarcContext.registerFunctions(spark)
 
-  // Not cached by default: per-query tag filters push down through the
-  // aggregation to the scan, so a one-shot query only tokenizes the
-  // queried tag's fields. Call cacheIndexes() for repeated querying.
-  lazy val tagIdx: DataFrame = tagIndex(bibs.unionByName(auths))
+  // Not cached by default: a one-shot query prunes each record's
+  // datafields to the queried tag before the explode (tagEntriesFor),
+  // so it only tokenizes that tag's fields. Call cacheIndexes() for
+  // repeated querying: both phases of a tag search then read the
+  // cached posting frame and touch the record table only in the final
+  // `_id` semi join.
+  lazy val postings: DataFrame = {
+    val records = bibs.unionByName(auths)
+    tagPostings(records).coalesce(postingPartitions(records))
+  }
+  /** The `_index_<tag>` shape, (tag, raw, subfields, text, words): the
+    * grouped projection of [[postings]], never cached itself. */
+  lazy val tagIdx: DataFrame = tagIndexOf(postings)
   lazy val browseIdx: DataFrame = browseIndex(bibs.unionByName(auths))
   lazy val headings: DataFrame = authHeadings(auths)
 
   def cacheIndexes(): this.type = {
-    tagIdx.cache(); browseIdx.cache(); headings.cache(); this
+    postings.cache(); browseIdx.cache(); headings.cache(); this
   }
 
-  /** One-tag RESOLUTION entries without the index aggregate: the
-    * tagIndex groupBy(tag, raw) exists only to dedup entries for the
-    * materialized index; for query resolution the per-field rows carry
-    * the same (text, words, subfields) semantics and the value set is
-    * `.distinct()`ed at the end — so skip the shuffle entirely and
-    * derive field-level entries straight off the records scan. Uses
-    * the cached index when one exists. */
-  private def tagEntriesFor(tag: String): DataFrame = {
-    if (tagIdx.storageLevel.useMemory)
-      tagIdx.where(col("tag") === tag).select("raw", "text", "words", "subfields")
-    else {
-      val fieldText = concat_ws(" ", transform(col("f").getField("subfields"),
-        s => coalesce(s.getField("value"), lit(""))))
-      bibs.unionByName(auths)
-        .select(explode(filter(col("datafields"), f => f.getField("tag") === tag)).as("f"))
-        .select(fieldText.as("raw"), col("f.subfields").as("subfields"))
-        .withColumn("text", concat(lit(" "), scrubUdf(col("raw")), lit(" ")))
-        .withColumn("words", tokenizeUdf(col("raw")))
-    }
+  /** Partitions of the posting frame: one per 128 MB of record input
+    * (the scan split size), at least one. A scan spreads even a small
+    * table over every core, and a search pays one task per partition on
+    * each pass over the cached frame; for an index of a few MB that
+    * fixed cost, not the rows, is what the passes cost. Coalescing
+    * merges partitions without a shuffle. */
+  private def postingPartitions(records: DataFrame): Int = {
+    val bytes = records.queryExecution.optimizedPlan.stats.sizeInBytes
+    (bytes / (128L << 20) + 1).min(Int.MaxValue).toInt
   }
+
+  /** One tag's postings, (record_type, _id, tag, subfields, words):
+    * the cached frame filtered to `tag`, or — uncached — the records
+    * with `datafields` pruned to `tag` before the explode. */
+  private def tagEntriesFor(tag: String): DataFrame =
+    if (postings.storageLevel.useMemory) postings.where(col("tag") === tag)
+    else tagPostings(bibs.unionByName(auths), Some(tag))
 
   private def records(recordType: String): DataFrame =
     if (recordType == "auth") auths else bibs
@@ -102,11 +111,16 @@ final class SparkQueryCompiler(spark: SparkSession, bibs: DataFrame, auths: Data
     runInList(QueryParser.parse(query, recordType))
 
   /** The unbounded-match execution path (SCALING.md): top-level
-    * positive text/regex conditions become LEFT SEMI joins against the
-    * index DataFrames instead of collected in-lists — no driver
-    * materialization, no size cap. Catalyst/AQE picks broadcast vs
-    * shuffled semi join from runtime sizes. Remaining conditions
-    * compile to predicates as usual. */
+    * positive text/regex conditions become LEFT SEMI joins instead of
+    * collected in-lists — nothing is collected, no size cap.
+    * Each runs in two steps over the tag's postings (tagEntriesFor):
+    * resolve the matched values over both record types, then keep the
+    * `_id`s of this record type's postings that carry a matched value
+    * (or an xref to a matched heading). The record table is touched
+    * once, by the final `_id` semi join; the `record_type` filter is
+    * required because bib and auth ids overlap. Catalyst/AQE picks
+    * broadcast vs shuffled joins from runtime sizes. Remaining
+    * conditions compile to predicates as usual. */
   def runSemiJoin(ast: QueryAst): DataFrame = {
     val rt = ast.recordType
     val (joinable, rest) = ast.conditions.partition {
@@ -124,22 +138,20 @@ final class SparkQueryCompiler(spark: SparkSession, bibs: DataFrame, auths: Data
     for (cond <- joinable) {
       val (tag, code, matchedValues: DataFrame) = cond match {
         case TagRegex(t, c, rx, _, _) =>
-          (t, c, tagRegexValues(t, c, rx).select(normalizeCol(col("v")).as("mnorm")).distinct())
+          (t, c, tagRegexValues(t, c, rx).select(normalizeCol(col("v")).as("mnorm")))
         case TagText(t, c, tq, _, _) =>
-          (t, c, tagTextValues(t, c, tq).select(normalizeCol(col("v")).as("mnorm")).distinct())
+          (t, c, tagTextValues(t, c, tq).select(normalizeCol(col("v")).as("mnorm")))
         case other => throw new IllegalStateException(other.toString)
       }
-      // records whose tag subfields hit the matched values; prune the
-      // array to the tag BEFORE the explode so the generate never
-      // materializes the other tags' fields
-      val exploded = df
-        .select(col("_id").as("rid"),
-          explode(filter(col("datafields"), f => f.getField("tag") === tag)).as("f"))
-        .select(col("rid"), explode(col("f.subfields")).as("s"))
-      val codeScoped = code.map(c => exploded.where(col("s.code") === c)).getOrElse(exploded)
+      // this record type's subfields of the tag, one row per (_id,
+      // subfield). Every step is a semi join, so repeats on either side
+      // never multiply rows and no step needs a distinct (a shuffle).
+      val subs = tagEntriesFor(tag).where(col("record_type") === rt)
+        .select(col("_id").as("rid"), explode(col("subfields")).as("s"))
+      val codeScoped = code.map(c => subs.where(col("s.code") === c)).getOrElse(subs)
       val valueHits = codeScoped
         .where(col("s.xref").isNull) // linked subfields match via xref branch
-        .join(matchedValues, normalizeCol(col("s.value")) === col("mnorm"))
+        .join(matchedValues, normalizeCol(col("s.value")) === col("mnorm"), "left_semi")
         .select("rid")
       // auth xref OR branch: heading values in the matched set
       val xrefHits =
@@ -147,11 +159,11 @@ final class SparkQueryCompiler(spark: SparkSession, bibs: DataFrame, auths: Data
             code.forall(c => DlxConfig.isAuthorityControlled(rt, tag, c))) {
           val src = DlxConfig.authorityControlled(rt)(tag).values.head
           val xrefDf = headings.where(col("tag") === src)
-            .join(matchedValues, col("norm_value") === col("mnorm"))
-            .select(col("xref").as("mxref")).distinct()
-          exploded.join(xrefDf, col("s.xref") === col("mxref")).select("rid")
+            .join(matchedValues, col("norm_value") === col("mnorm"), "left_semi")
+            .select(col("xref").as("mxref"))
+          subs.join(xrefDf, col("s.xref") === col("mxref"), "left_semi").select("rid")
         } else df.sparkSession.emptyDataFrame.withColumn("rid", lit(0L)).limit(0).select("rid")
-      val hits = valueHits.union(xrefHits).distinct()
+      val hits = valueHits.union(xrefHits)
       df = df.join(hits, df("_id") === hits("rid"), "left_semi")
     }
     df
@@ -294,23 +306,30 @@ final class SparkQueryCompiler(spark: SparkSession, bibs: DataFrame, auths: Data
     col("v").rlike(pattern)
   }
 
+  /** The tag's subfield values (col "v") matching a regex, one row per
+    * matching posting subfield: repeats are kept for the semi joins of
+    * runSemiJoin; the in-list resolvers take them distinct. */
   private def tagRegexValues(tag: String, code: Option[String], rx: Rx): DataFrame = {
     val subs = tagEntriesFor(tag)
       .select(explode(col("subfields")).as("s"))
       .select(col("s.code").as("c"), col("s.value").as("v"))
     code.map(c => subs.where(col("c") === c)).getOrElse(subs)
       .where(col("v").isNotNull && rxFilter(rx))
-      .select("v").distinct()
+      .select("v")
   }
 
+  /** The tag's subfield values (col "v") matching a fielded text query,
+    * one row per matching posting subfield, repeats kept. */
   private def tagTextValues(tag: String, code: Option[String], tq: TextQuery): DataFrame = {
     val terms = Tokenizer.tokenize(tq.terms)
     val negated = Tokenizer.tokenize(tq.negated.mkString(" "))
     var entries = tagEntriesFor(tag)
     terms.foreach(t => entries = entries.where(array_contains(col("words"), t)))
     negated.foreach(t => entries = entries.where(!array_contains(col("words"), t)))
+    // the phrase form of the field text is derived, not stored
+    val text = fieldPaddedText(fieldTextCol(col("subfields")))
     tq.phrases.foreach { p =>
-      entries = entries.where(col("text").rlike("\\b" + java.util.regex.Pattern.quote(p) + "\\b"))
+      entries = entries.where(text.rlike("\\b" + java.util.regex.Pattern.quote(p) + "\\b"))
     }
     val values = entries.select(explode(col("subfields")).as("s"))
       .select(col("s.code").as("c"), col("s.value").as("v"))
@@ -319,18 +338,18 @@ final class SparkQueryCompiler(spark: SparkSession, bibs: DataFrame, auths: Data
     // value-level term containment evaluated in the cluster (not on the
     // driver): each value must itself contain every stemmed term
     terms.foldLeft(scoped)((d, w) => d.where(array_contains(tokenizeUdf(col("v")), w)))
-      .select("v").distinct()
+      .select("v")
   }
 
   /** subfield values matched by a regex in the tag index (capped;
     * None = beyond the reference's in-list limit). */
   def resolveTagRegex(tag: String, code: Option[String], rx: Rx): Option[Seq[String]] =
-    collectCapped(tagRegexValues(tag, code, rx))
+    collectCapped(tagRegexValues(tag, code, rx).distinct())
 
   /** subfield values matched by field-level text search + value-level
     * term containment (capped). */
   def resolveTagText(tag: String, code: Option[String], tq: TextQuery): Option[Seq[String]] =
-    collectCapped(tagTextValues(tag, code, tq))
+    collectCapped(tagTextValues(tag, code, tq).distinct())
 
   /** auth ids whose source-tag heading subfield (code-scoped) matches. */
   private def authXrefs(rt: String, tag: String, code: String, value: Either[String, Rx]): XrefSet = {

@@ -41,6 +41,7 @@ object StoreStress {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    graft.Bench.silenceTeardownNoise()
     import MarcSchema.marcRowEncoder
 
     val base = java.nio.file.Files.createTempDirectory("storestress").toString
@@ -110,6 +111,7 @@ object StoreStress {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    graft.Bench.silenceTeardownNoise()
     import MarcSchema.marcRowEncoder
 
     val base = java.nio.file.Files.createTempDirectory("storestress_crash").toString
@@ -224,6 +226,7 @@ object StoreStress {
       .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "128")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    graft.Bench.silenceTeardownNoise()
     spark
   }
 
@@ -388,6 +391,7 @@ object StoreStress {
       .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "128")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    graft.Bench.silenceTeardownNoise()
     import MarcSchema.marcRowEncoder
     val rem = if (mode == "same" || w == "A") 0L else 97L
     val store = new graft.store.MarcStore(spark, base)

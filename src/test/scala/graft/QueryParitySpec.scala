@@ -14,21 +14,38 @@ import Fixtures._
   * the Spark plans and the row engine is a bug by definition. */
 class QueryParitySpec extends AnyFunSuite {
 
+  import QueryParitySpec._
+
   lazy val spark = SparkTestSession.spark
-  // audit-stamped copies so date/user conditions have ground truth
-  private lazy val pb1 = bib1.copy(
-    created = Some(java.time.Instant.parse("2020-01-10T08:00:00Z")),
-    updated = Some(java.time.Instant.parse("2020-02-10T12:00:00Z")),
-    user = Some("alice"), createdUser = Some("carol"))
-  private lazy val pb2 = bib2.copy(
-    created = Some(java.time.Instant.parse("2021-06-01T00:00:00Z")),
-    updated = Some(java.time.Instant.parse("2021-06-01T23:59:59Z")),
-    user = Some("bob"), createdUser = None)
   lazy val bibsDf = graft.spark.MarcSchema.toDataset(spark, Seq(pb1, pb2)).toDF()
   lazy val authsDf = graft.spark.MarcSchema.toDataset(spark, Seq(auth1, auth2)).toDF()
   lazy val compiler = new SparkQueryCompiler(spark, bibsDf, authsDf)
   lazy val rowEngine = new RowQueryEngine(Seq(pb1, pb2), Seq(auth1, auth2))
 
+  test("random condition trees: row engine == in-list plan == semi-join plan") {
+    for ((ast, i) <- corpus.zip(LazyList.from(1))) {
+      val expected = rowEngine.run(ast).flatMap(_.id).toSet
+      val inList = compiler.runInList(ast).select("_id").collect().map(_.getLong(0)).toSet
+      assert(inList == expected, s"[$i] in-list diverged for $ast: spark=$inList row=$expected")
+      val semi = compiler.runSemiJoin(ast).select("_id").collect().map(_.getLong(0)).toSet
+      assert(semi == expected, s"[$i] semi-join diverged for $ast: spark=$semi row=$expected")
+    }
+  }
+}
+
+/** The parity corpus: audit-stamped fixtures and a seeded stream of
+  * random condition trees, shared by the specs that check a plan
+  * against the row engine. */
+object QueryParitySpec {
+  // audit-stamped copies so date/user conditions have ground truth
+  lazy val pb1 = bib1.copy(
+    created = Some(java.time.Instant.parse("2020-01-10T08:00:00Z")),
+    updated = Some(java.time.Instant.parse("2020-02-10T12:00:00Z")),
+    user = Some("alice"), createdUser = Some("carol"))
+  lazy val pb2 = bib2.copy(
+    created = Some(java.time.Instant.parse("2021-06-01T00:00:00Z")),
+    updated = Some(java.time.Instant.parse("2021-06-01T23:59:59Z")),
+    user = Some("bob"), createdUser = None)
   private val tagPool = Seq("245", "520", "650", "710", "999")
   private val codes = Seq("a", "b", "c")
   private val values = Seq("This", "Another", "title", "is the", "Header",
@@ -89,15 +106,9 @@ class QueryParitySpec extends AnyFunSuite {
     else if (r.nextBoolean()) OrCond(Seq(genCond(r, depth - 1), genCond(r, depth - 1)))
     else AndCond(Seq(genCond(r, depth - 1), genCond(r, depth - 1)))
 
-  test("random condition trees: row engine == in-list plan == semi-join plan") {
+  /** The 40 seeded condition trees the parity test runs. */
+  def corpus: Seq[QueryAst] = {
     val r = new scala.util.Random(20260812L)
-    for (i <- 1 to 40) {
-      val ast = QueryAst(Seq(genCond(r, 2)), "bib")
-      val expected = rowEngine.run(ast).flatMap(_.id).toSet
-      val inList = compiler.runInList(ast).select("_id").collect().map(_.getLong(0)).toSet
-      assert(inList == expected, s"[$i] in-list diverged for $ast: spark=$inList row=$expected")
-      val semi = compiler.runSemiJoin(ast).select("_id").collect().map(_.getLong(0)).toSet
-      assert(semi == expected, s"[$i] semi-join diverged for $ast: spark=$semi row=$expected")
-    }
+    Seq.fill(40)(QueryAst(Seq(genCond(r, 2)), "bib"))
   }
 }

@@ -93,6 +93,92 @@ class SparkMarcSpec extends AnyFunSuite {
     }
   }
 
+  /** Run `body` against a compiler whose indexes are cached, dropping
+    * the cache afterwards: a cached plan is shared by every frame with
+    * the same plan, so it must not leak into the other tests. */
+  private def withCached[T](c: SparkQueryCompiler)(body: SparkQueryCompiler => T): T =
+    try body(c.cacheIndexes())
+    finally { c.postings.unpersist(); c.browseIdx.unpersist(); c.headings.unpersist() }
+
+  private def ids(df: org.apache.spark.sql.DataFrame): Set[Long] =
+    df.select("_id").collect().map(_.getLong(0)).toSet
+
+  test("cached posting index: semi-join matches the uncached compiler and the in-list path") {
+    val queries = Seq(
+      "650__a:/[Hh]eader/", "650:/eader/", "245:titl*", "650:head*",
+      "520__a:\"another description\"", "245__c:*itl*",
+      "245__a:'This' AND 650__a:head*")
+    // uncached answers first: the cache would serve any frame with the same plan
+    val expected = queries.map(q => ids(compiler.runSemiJoin(q, "bib")))
+    val inList = queries.map(q => ids(compiler.runInList(q)))
+    val parity = new SparkQueryCompiler(spark,
+      MarcSchema.toDataset(spark, Seq(QueryParitySpec.pb1, QueryParitySpec.pb2)).toDF(), authsDs.toDF())
+    val parityExpected = QueryParitySpec.corpus.map(a => ids(parity.runSemiJoin(a)))
+    val parityInList = QueryParitySpec.corpus.map(a => ids(parity.runInList(a)))
+    withCached(new SparkQueryCompiler(spark, bibsDs.toDF(), authsDs.toDF())) { cached =>
+      for ((q, i) <- queries.zipWithIndex) {
+        val got = ids(cached.runSemiJoin(q, "bib"))
+        assert(got == expected(i) && got == inList(i),
+          s"query '$q': cached=$got uncached=${expected(i)} inlist=${inList(i)}")
+      }
+    }
+    withCached(parity) { cached =>
+      for ((ast, i) <- QueryParitySpec.corpus.zipWithIndex) {
+        val got = ids(cached.runSemiJoin(ast))
+        assert(got == parityExpected(i) && got == parityInList(i),
+          s"[${i + 1}] $ast: cached=$got uncached=${parityExpected(i)} inlist=${parityInList(i)}")
+      }
+    }
+  }
+
+  test("tag search keeps the record type when a bib and an auth share an _id") {
+    // auth 7 alone carries the 680 note; bib 7 only shares its id
+    val bib = MarcRecord(recordType = "bib", id = Some(7L), fields = Vector(
+      DataField("245", " ", " ", Vector(Subfield("a", Some("Plain title"))))))
+    val auth = MarcRecord(recordType = "auth", id = Some(7L), fields = Vector(
+      DataField("150", " ", " ", Vector(Subfield("a", Some("Zebras")))),
+      DataField("680", " ", " ", Vector(Subfield("a", Some("Zebra scope note"))))))
+    val c = new SparkQueryCompiler(spark,
+      MarcSchema.toDataset(spark, Seq(bib)).toDF(), MarcSchema.toDataset(spark, Seq(auth)).toDF())
+    def check(c: SparkQueryCompiler, regime: String): Unit = {
+      for (q <- Seq("680__a:zebra", "680__a:/^Zebra/", "680:scope"))
+        assert(ids(c.run(q, "bib")).isEmpty, s"$regime bib '$q' matched the auth's postings")
+      assert(ids(c.run("680__a:zebra", "auth")) == Set(7L), s"$regime auth search")
+      assert(ids(c.run("245__a:plain", "bib")) == Set(7L), s"$regime bib search")
+    }
+    check(c, "uncached")
+    withCached(c)(check(_, "cached"))
+  }
+
+  test("cached tag search scans the records once, under the final _id semi join") {
+    import org.apache.spark.sql.execution.{FileSourceScanExec, GenerateExec, SparkPlan}
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    import org.apache.spark.sql.catalyst.plans.LeftSemi
+    val dir = java.nio.file.Files.createTempDirectory("postings_plan").toString
+    bibsDs.write.parquet(s"$dir/bib")
+    authsDs.write.parquet(s"$dir/auth")
+    val c = new SparkQueryCompiler(spark, spark.read.parquet(s"$dir/bib"), spark.read.parquet(s"$dir/auth"))
+    withCached(c) { cached =>
+      val df = cached.run("245__a:another", "bib")
+      // collect the frame itself so AQE finalizes its plan
+      assert(df.collect().map(_.getAs[Long]("_id")).toSet == Set(2L))
+      // the final (AQE) plan; a cached frame's own plan is not a child
+      val helper = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+      val plan = df.queryExecution.executedPlan
+      def scans(p: SparkPlan) = helper.collect(p) { case s: FileSourceScanExec => s }
+      val all = scans(plan)
+      assert(all.size == 1 && all.head.relation.location.rootPaths.head.toString.endsWith("/bib"),
+        s"expected one scan of the bib table:\n$plan")
+      val semi = helper.collect(plan) { case j: BaseJoinExec if j.joinType == LeftSemi => j }
+      assert(semi.nonEmpty, s"no LeftSemi join:\n$plan")
+      val top = semi.head
+      assert(scans(top.left).size == 1 && top.leftKeys.flatMap(_.references.map(_.name)) == Seq("_id"),
+        s"the bib scan must feed the final _id semi join:\n$plan")
+      val generates = helper.collect(plan) { case g: GenerateExec => g }
+      assert(generates.forall(g => scans(g).isEmpty), s"a Generate runs over the bib scan:\n$plan")
+    }
+  }
+
   test("resolveLinkedAuto picks map vs join by dimension size, same result") {
     val stripped = bibsDs.toDF().withColumn("datafields",
       transform(col("datafields"), f => struct(
