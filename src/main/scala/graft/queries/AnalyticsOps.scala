@@ -114,7 +114,8 @@ object AnalyticsOps {
       .withColumn("outdeg", count(lit(1)).over(
         org.apache.spark.sql.expressions.Window.partitionBy("src")))
       .persist()
-    val nodes = edges.select(col("src").as("node")).distinct().persist()
+    // a null src never joins and spawns no node, as in the local regime
+    val nodes = edges.where(col("src").isNotNull).select(col("src").as("node")).distinct().persist()
     // REGIME SPLIT (round 13, guide §3.1): the rank frame is
     // node-bounded, so while the node count fits a broadcast budget,
     // each iteration's two node-keyed joins ride broadcasts — the only

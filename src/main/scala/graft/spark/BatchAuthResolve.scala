@@ -55,8 +55,12 @@ object BatchAuthResolve {
   val mrkZeroXref: Seq[String] => Option[Long] = graft.records.ZeroXref.mrk
   val xmlZeroXref: Seq[String] => Option[Long] = graft.records.ZeroXref.xml
 
-  /** exploded (tag, code, value, xref) view of the auth dimension —
-    * raw values, because xlookup matches raw equality, not collation. */
+  /** exploded (tag, code, value, xref) view of EVERY auth subfield —
+    * raw values, because xlookup matches raw equality, not collation.
+    * Not the heading dimension (MarcContext.authHeadings, first 1XX
+    * field only, which MarcStore persists): xlookup matches ANY field
+    * of the auth carrying the source tag (dlx/marc/__init__.py:
+    * 1913-1939), a different, wider view. */
   private[graft] def authSubs(auths: DataFrame): DataFrame =
     auths.select(col("_id").as("a_xref"), explode(col("datafields")).as("f"))
       .select(col("a_xref"), col("f.tag").as("a_tag"), explode(col("f.subfields")).as("s"))
@@ -158,9 +162,7 @@ object BatchAuthResolve {
         // a bounded pull, never the dimension.
         def headingPairs(cands: Seq[Long]): Map[Long, Seq[(String, String)]] =
           auths.where(col("_id").isin(cands: _*))
-            .select(col("_id").as("a_xref"),
-              try_element_at(filter(col("datafields"),
-                f => f.getField("tag").startsWith("1")), lit(1)).as("hf"))
+            .select(col("_id").as("a_xref"), MarcContext.headingField.as("hf"))
             .where(col("hf").isNotNull)
             .select(col("a_xref"), transform(col("hf.subfields"),
               s => struct(s.getField("code").as("c"),

@@ -29,15 +29,6 @@ case class CollationNormalizeExpr(child: Expression) extends UnaryExpression {
   override def prettyName: String = "dlx_normalize"
 }
 
-object CollationNormalizeExpr {
-  /** Register as a SQL function so Column-side code can use
-    * call_function without internal Column<->Expression bridging. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "dlx_normalize", args => CollationNormalizeExpr(args.head), "built-in")
-  }
-}
-
 /** Numeric-aware collation SORT key (strength-1 + `numericOrdering:
   * true`, the reference's default collation — dlx/config.py:340): byte
   * order of the key equals the collation's sort order, so a sorted
@@ -61,11 +52,4 @@ case class CollationSortKeyExpr(child: Expression) extends UnaryExpression {
     copy(child = newChild)
 
   override def prettyName: String = "dlx_sort_key"
-}
-
-object CollationSortKeyExpr {
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "dlx_sort_key", args => CollationSortKeyExpr(args.head), "built-in")
-  }
 }

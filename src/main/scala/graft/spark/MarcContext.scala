@@ -1,15 +1,20 @@
 package graft.spark
 
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.functions._
 
 /** Derived DataFrames over the bibs/auths tables — the Spark-native
   * form of the reference's maintained collections (SURVEY §2.9, §4):
   *
-  *  - [[authHeadings]]: the auth-heading dimension; the reference's
-  *    Auth caches (dlx/marc/__init__.py:1835-1874) become a broadcast
-  *    hash join side. At 100 TB the auths table is still dimension-
-  *    sized relative to bibs, so every value resolution is a
+  *  - [[authHeadings]]: the auth-heading dimension, the reference's
+  *    one shared Auth cache (dlx/marc/__init__.py:1835-1874). Every
+  *    derivation over the same auth plan is the same plan, so the copy
+  *    MarcStore persists per auth generation is the one Spark's cache
+  *    manager hands to every reader (compiler, typeahead, linked-value
+  *    resolution, index builds). At 100 TB the auths table is still
+  *    dimension-sized relative to bibs, so every value resolution is a
   *    broadcast, never a fact-table shuffle.
   *  - [[resolveLinked]]: materializes linked subfield values record-
   *    wide (Auth.lookup per subfield becomes ONE broadcast join).
@@ -27,72 +32,63 @@ import org.apache.spark.sql.functions._
   */
 object MarcContext {
 
-  // Column forms of the tokenizer, backed by the native codegen
-  // expressions in TextExprs (no UDF encoder round-trip). Registration
-  // is idempotent and happens at Column-construction time against the
-  // active session, so every entry point — compiler, index builds,
-  // streaming, tests — resolves without an explicit init call.
-  // coalesce keeps the historical UDF null semantics ("".../empty).
+  // Column forms of the tokenizer and the collation, backed by the
+  // native codegen expressions (TextExprs, CollationNormalizeExpr,
+  // CollationSortKeyExpr): no UDF encoder round-trip, and one plan per
+  // derivation whatever ran before it. They are registered as SQL
+  // functions (so Column code can use call_function) at Column-
+  // construction time, once per session, against the active session,
+  // else the default one (a thread with no active session): every
+  // entry point — store, compiler, index builds, streaming, tests —
+  // resolves without an explicit init call. The four register
+  // together, so one name tells whether a session has them.
   private def withRegistered(build: => Column): Column = {
-    SparkSession.getActiveSession.foreach(TextExprs.register)
+    SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
+      .filterNot(_.sessionState.functionRegistry.functionExists(FunctionIdentifier("dlx_sort_key")))
+      .foreach { s =>
+        val registry = s.sessionState.functionRegistry
+        def register(name: String, expr: Expression => Expression): Unit =
+          registry.createOrReplaceTempFunction(name, args => expr(args.head), "built-in")
+        register("dlx_scrub", ScrubExpr)
+        register("dlx_tokenize", TokenizeExpr)
+        register("dlx_normalize", CollationNormalizeExpr)
+        register("dlx_sort_key", CollationSortKeyExpr)
+      }
     build
   }
 
+  // coalesce keeps the historical UDF null semantics ("".../empty)
   def scrubUdf(c: Column): Column =
     withRegistered(call_function("dlx_scrub", coalesce(c, lit(""))))
 
   def tokenizeUdf(c: Column): Column =
     withRegistered(call_function("dlx_tokenize", coalesce(c, lit(""))))
 
-  def registerFunctions(spark: SparkSession): Unit = {
-    TextExprs.register(spark)
-    CollationNormalizeExpr.register(spark)
-    CollationSortKeyExpr.register(spark)
-  }
-
   /** Numeric-aware collation sort key (strength-1 +
     * numericOrdering:true — the reference's default collation): byte
-    * order == collation order. Codegen expression when registered,
-    * UDF fallback otherwise. */
-  def sortKeyCol(c: Column): Column = {
-    org.apache.spark.sql.SparkSession.getActiveSession match {
-      case Some(s) if s.sessionState.functionRegistry
-          .functionExists(org.apache.spark.sql.catalyst.FunctionIdentifier("dlx_sort_key")) =>
-        call_function("dlx_sort_key", c)
-      case _ =>
-        val k = udf((s2: String) => if (s2 == null) null else graft.query.Collation.sortKey(s2))
-        k(c)
-    }
-  }
+    * order == collation order. */
+  def sortKeyCol(c: Column): Column = withRegistered(call_function("dlx_sort_key", c))
+
+  /** strength-1 collation shadow: lowercase + strip diacritics
+    * (SURVEY §4 collation row). */
+  def normalizeCol(c: Column): Column = withRegistered(call_function("dlx_normalize", c))
+
+  /** An auth's heading field: the first datafield whose tag starts
+    * with '1' (the reference's heading_field,
+    * dlx/marc/__init__.py:2049-2057). try_element_at makes it null,
+    * ANSI-mode safe, for an auth without a 1XX. */
+  def headingField: Column =
+    try_element_at(filter(col("datafields"), f => f.getField("tag").startsWith("1")), lit(1))
 
   /** (xref, tag, code, value, norm_value) — one row per subfield of
-    * each auth's heading field (first field whose tag starts '1'). */
-  def authHeadings(auths: DataFrame): DataFrame = {
-    val heading = auths.select(col("_id").as("xref"),
-      // first datafield with tag like '1%' — try_element_at so an auth
-      // without a 1XX yields null (ANSI-mode safe) instead of throwing
-      try_element_at(filter(col("datafields"), f => f.getField("tag").startsWith("1")), lit(1)).as("hf"))
+    * each auth's [[headingField]]. */
+  def authHeadings(auths: DataFrame): DataFrame =
+    auths.select(col("_id").as("xref"), headingField.as("hf"))
       .where(col("hf").isNotNull)
-    heading.select(col("xref"), col("hf.tag").as("tag"),
-        explode(col("hf.subfields")).as("sf"))
+      .select(col("xref"), col("hf.tag").as("tag"), explode(col("hf.subfields")).as("sf"))
       .select(col("xref"), col("tag"), col("sf.code").as("code"), col("sf.value").as("value"))
       .where(col("value").isNotNull)
       .withColumn("norm_value", normalizeCol(col("value")))
-  }
-
-  /** strength-1 collation shadow: lowercase + strip diacritics
-    * (SURVEY §4 collation row). Uses the native codegen expression
-    * when the session has it registered, else the UDF fallback. */
-  def normalizeCol(c: Column): Column = {
-    org.apache.spark.sql.SparkSession.getActiveSession match {
-      case Some(s) if s.sessionState.functionRegistry
-          .functionExists(org.apache.spark.sql.catalyst.FunctionIdentifier("dlx_normalize")) =>
-        call_function("dlx_normalize", c)
-      case _ =>
-        val norm = udf((s2: String) => if (s2 == null) null else graft.query.Collation.normalize(s2))
-        norm(c)
-    }
-  }
 
   /** Materialize linked subfield values via ONE broadcast join against
     * the heading dimension (the Spark-shaped Auth.lookup). */

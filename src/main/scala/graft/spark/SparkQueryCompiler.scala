@@ -48,8 +48,6 @@ final class SparkQueryCompiler(spark: SparkSession, bibs: DataFrame, auths: Data
 
   import MarcContext._
 
-  MarcContext.registerFunctions(spark)
-
   // Not cached by default: a one-shot query prunes each record's
   // datafields to the queried tag before the explode (tagEntriesFor),
   // so it only tokenizes that tag's fields. Call cacheIndexes() for
@@ -64,6 +62,9 @@ final class SparkQueryCompiler(spark: SparkSession, bibs: DataFrame, auths: Data
     * grouped projection of [[postings]], never cached itself. */
   lazy val tagIdx: DataFrame = tagIndexOf(postings)
   lazy val browseIdx: DataFrame = browseIndex(bibs.unionByName(auths))
+  /** Over a MarcStore's `read("auth")` this is the store's persisted
+    * dimension of the current auth generation: the same plan, so
+    * Spark's cache manager serves it. */
   lazy val headings: DataFrame = authHeadings(auths)
 
   def cacheIndexes(): this.type = {

@@ -61,11 +61,4 @@ object TextExprs {
     val toks = graft.text.Tokenizer.tokenize(s.toString)
     new GenericArrayData(toks.map(t => UTF8String.fromString(t): Any).toArray)
   }
-
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "dlx_scrub", args => ScrubExpr(args.head), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "dlx_tokenize", args => TokenizeExpr(args.head), "built-in")
-  }
 }

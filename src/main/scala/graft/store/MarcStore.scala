@@ -72,11 +72,13 @@ final class MarcStore(spark: SparkSession, basePath: String, numBuckets: Int = 6
   private def invalidate(path: String): Unit = synchronized {
     MarcStore.bumpGeneration(path)
     dfCache.remove(path)
-    // the persisted heading dimension reads the old auth generation:
-    // drop it now, or refreshByPath would re-list and recache it only
-    // for liveAuthHeadings to discard it on its next access
-    if (new java.io.File(path) == new java.io.File(tablePath("auth"))) dropHeadings()
+    val auth = new java.io.File(path) == new java.io.File(tablePath("auth"))
+    // unpersist the old generation's heading dimension before
+    // refreshByPath, which would otherwise re-list and recache it,
+    // then register the new generation's (lazy: no job)
+    if (auth) dropHeadings()
     spark.catalog.refreshByPath(path)
+    if (auth) liveAuthHeadings
   }
 
   /** live table with the physical id_bucket column (partition pruning
@@ -132,28 +134,32 @@ final class MarcStore(spark: SparkSession, basePath: String, numBuckets: Int = 6
     recs.filter(col("_id") =!= -1L).unionByName(assigned)
   }
 
-  // live-auth heading dimension, persisted per TABLE GENERATION:
-  // validation re-derived it per commit otherwise (a nested-explode
-  // plan over the full auth table — the round-8 store profile's
-  // largest repeated phase across a commit lifecycle). The generation
-  // counter bumps on every auth-table swap, so a stale entry can never
-  // be read — it is unpersisted and replaced on first access after a
-  // write. Per-store-instance, so gate queries on temp stores never
-  // share state.
-  private val headingsCache = scala.collection.concurrent.TrieMap.empty[Long, DataFrame]
-  private def liveAuthHeadings: DataFrame = {
+  // The live-auth heading dimension: exactly one, the current auth
+  // table generation's, persisted. `invalidate` swaps it at every auth
+  // write; the persist is lazy, so its first reader materializes it —
+  // after a heading change that is the cascade's refresh collect,
+  // inside the write. Validation and merge read it here; the compiler's
+  // `headings`, AuthOps.partialLookup, resolveLinkedAuto and
+  // InitIndexes build the same plan over `read("auth")`, so Spark's
+  // cache manager hands them this copy. The generation check covers a
+  // write by another store instance on the same path.
+  private var headings: Option[(Long, DataFrame)] = None
+
+  private def liveAuthHeadings: DataFrame = synchronized {
     val gen = MarcStore.generation(tablePath("auth"))
-    headingsCache.getOrElse(gen, {
-      dropHeadings()
-      val df = MarcContext.authHeadings(read("auth").toDF()).persist()
-      headingsCache.put(gen, df)
-      df
-    })
+    headings match {
+      case Some((g, df)) if g == gen => df
+      case _ =>
+        dropHeadings()
+        val df = MarcContext.authHeadings(read("auth").toDF()).persist()
+        headings = Some(gen -> df)
+        df
+    }
   }
 
-  private def dropHeadings(): Unit = {
-    headingsCache.values.foreach(df => try df.unpersist() catch { case _: Throwable => () })
-    headingsCache.clear()
+  private def dropHeadings(): Unit = synchronized {
+    headings.foreach(_._2.unpersist())
+    headings = None
   }
 
   private def controlledKeysOf(rt: String): Seq[String] =
@@ -353,8 +359,7 @@ final class MarcStore(spark: SparkSession, basePath: String, numBuckets: Int = 6
     * field produce no row — nothing is attached to them yet. */
   private def headingChanges(incoming: DataFrame): DataFrame = {
     def headingOf(df: DataFrame): DataFrame =
-      df.select(col("_id").as("xref"),
-          try_element_at(filter(col("datafields"), f => f.getField("tag").startsWith("1")), lit(1)).as("hf"))
+      df.select(col("_id").as("xref"), MarcContext.headingField.as("hf"))
         .where(col("hf").isNotNull)
         .select(col("xref"), col("hf.tag").as("htag"),
           transform(filter(col("hf.subfields"), s => s.getField("value").isNotNull),
@@ -562,8 +567,10 @@ final class MarcStore(spark: SparkSession, basePath: String, numBuckets: Int = 6
 
   // store open: finish or roll back any swap a dead writer left behind
   // (under the store lock, so an ACTIVE writer's staging is never
-  // mistaken for a dangling one — its lock is held across the swap)
+  // mistaken for a dangling one — its lock is held across the swap),
+  // then register the heading dimension of the auth table as found
   StoreLock.withLock(basePath, lockWaitMs) { recoverAllStaging() }
+  liveAuthHeadings
 
   private def rmDir(f: java.io.File): Unit = SwapJournal.deleteRecursively(f)
 

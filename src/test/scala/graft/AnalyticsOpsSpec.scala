@@ -28,19 +28,22 @@ class AnalyticsOpsSpec extends AnyFunSuite {
     import spark.implicits._
     // multigraph adversary: duplicate edges (outdeg counts edge ROWS,
     // and each duplicate contributes separately), a non-source sink
-    // (9 receives mass but never ranks), and an asymmetric cycle
-    val edges = Seq(
-      (1L, 2L), (1L, 2L), (1L, 3L), (2L, 3L), (3L, 1L), (2L, 9L), (3L, 9L)
+    // (9 receives mass but never ranks), an asymmetric cycle, a
+    // null-src edge (spawns no node) and a null-dst edge (counts toward
+    // its src's outdeg, its contribution lands nowhere)
+    val edges = Seq[(java.lang.Long, java.lang.Long)](
+      (1L, 2L), (1L, 2L), (1L, 3L), (2L, 3L), (3L, 1L), (2L, 9L), (3L, 9L),
+      (null, 1L), (3L, null)
     ).toDF("src", "dst")
     def run(): Map[Long, Long] =
       AnalyticsOps.pageRank(edges, iterations = 4)
         .collect().map(x => x.getLong(0) -> x.getLong(1)).toMap
-    val local = run() // default cap (2M) >> 7 edges: local regime
+    val local = run() // default cap (2M) >> 9 edges: local regime
     spark.conf.set("spark.graft.pagerank.localEdgeCap", "0")
     try {
       val dist = run() // cap 0: the distributed loop
       assert(local == dist)
-      assert(!local.contains(9L)) // sinks never enter the rank frame
+      assert(local.keySet == Set(1L, 2L, 3L)) // sinks and null src never rank
     } finally spark.conf.unset("spark.graft.pagerank.localEdgeCap")
   }
 

@@ -594,6 +594,7 @@ class SparkMarcSpec extends AnyFunSuite {
 
   test("auth commit cascades heading change to attached bibs by default") {
     val dir = java.nio.file.Files.createTempDirectory("marcstore6").toString
+    val rddsBefore = spark.sparkContext.getPersistentRDDs.keySet.toSet
     val store = new graft.store.MarcStore(spark, dir)
     store.commit(authsDs, user = "t")
     store.commit(bibsDs, user = "t")
@@ -611,6 +612,97 @@ class SparkMarcSpec extends AnyFunSuite {
     assert(store.readHistory("bib").where(col("_id") === 2L).count() == 2L)
     val b2 = store.read("bib").where(col("_id") === 2L).head()
     assert(b2.datafields.find(_.tag == "650").get.subfields.head.value == "Updated Header")
+    assertDimensionServed(store, rddsBefore, Map(1L -> "Updated Header", 2L -> "Another header"))
+    // merge 2 into 1: bib 1's 710$a moves to auth 1, auth 2 is deleted
+    store.merge(gaining = 1L, losing = 2L, user = "t3")
+    assertDimensionServed(store, rddsBefore, Map(1L -> "Updated Header"))
+  }
+
+  /** After an auth write, the readers of the heading dimension — a
+    * fresh compiler's `headings`, the typeahead, and the linked-value
+    * resolution the cascade runs — all read the store's persisted copy
+    * (an InMemoryRelation in their plans) and see the new headings;
+    * the store keeps one dimension, not one per generation. */
+  private def assertDimensionServed(store: graft.store.MarcStore, rddsBefore: Set[Int],
+      want: Map[Long, String]): Unit = {
+    val c = new SparkQueryCompiler(spark, store.read("bib").toDF(), store.read("auth").toDF())
+    assert(readsCache(c.headings))
+    assert(c.headings.select("xref", "value").collect()
+      .map(r => r.getLong(0) -> r.getString(1)).toMap == want)
+    val typeahead = AuthOps.partialLookup(store.read("auth").toDF(), "bib", "650", "a", "updated")
+    assert(readsCache(typeahead))
+    assert(typeahead.collect().map(r => (r.getString(0), r.getLong(1))).toSeq == Seq("Updated Header" -> 1L))
+    val (bibs, plans) = actionPlans {
+      AuthOps.refreshLinkedValuesTyped(store.read("bib"), store.read("auth").toDF()).collect()
+    }
+    assert(plans.exists(readsCache)) // resolveLinkedAuto's dimension probe
+    val linked = bibs.flatMap(_.datafields).flatMap(_.subfields).collect {
+      case s if s.xref != null => s.xref.longValue -> s.value
+    }.toSet
+    assert(linked.nonEmpty && linked.subsetOf(want.toSet))
+    val dims = spark.sparkContext.getPersistentRDDs.count { case (id, r) =>
+      !rddsBefore(id) && Option(r.name).exists(_.contains("dlx_normalize(")) }
+    assert(dims == 1, s"$dims persisted heading dimensions")
+  }
+
+  private def readsCache(df: org.apache.spark.sql.DataFrame): Boolean =
+    readsCache(df.queryExecution)
+
+  private def readsCache(qe: org.apache.spark.sql.execution.QueryExecution): Boolean =
+    qe.withCachedData.exists(_.isInstanceOf[org.apache.spark.sql.execution.columnar.InMemoryRelation])
+
+  /** `f`'s result and the query executions of the Dataset actions it
+    * runs. Listener events arrive asynchronously, so a marker action
+    * run after `f` flushes them: its event is delivered after every
+    * earlier one. */
+  private def actionPlans[A](f: => A): (A, Seq[org.apache.spark.sql.execution.QueryExecution]) = {
+    import org.apache.spark.sql.execution.QueryExecution
+    val marker = "action_plans_marker"
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
+    val markerSeen = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        if (qe.analyzed.output.map(_.name) == Seq(marker)) markerSeen.countDown() else seen.add(qe)
+      override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    val result = try {
+      val r = f
+      spark.range(1).toDF(marker).collect()
+      assert(markerSeen.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      r
+    } finally spark.listenerManager.unregister(listener)
+    (result, seen.toArray(Array.empty[QueryExecution]).toSeq)
+  }
+
+  test("heading dimension: one plan whatever ran first, served from the store's cache") {
+    import org.apache.spark.sql.SparkSession
+    val prev = SparkSession.getActiveSession
+    // a session no compiler was ever built in: nothing registered the
+    // native collation functions before the store derived its dimension
+    val s2 = spark.newSession()
+    SparkSession.setActiveSession(s2)
+    try {
+      val dir = java.nio.file.Files.createTempDirectory("marcstore_dimplan").toString
+      val store = new graft.store.MarcStore(s2, dir)
+      store.commit(MarcSchema.toDataset(s2, Seq(auth1, auth2)), user = "t")
+      // bib 1's 650$a and 710$a carry xrefs: validation reads the
+      // store's dimension before any compiler exists
+      store.commit(MarcSchema.toDataset(s2, Seq(bib1)), user = "t")
+      val c = new SparkQueryCompiler(s2, store.read("bib").toDF(), store.read("auth").toDF())
+      assert(readsCache(c.headings))
+      val v = s2.range(1).select(lit("Ünïcode 10").as("v"))
+      def hasUdf(df: org.apache.spark.sql.DataFrame) = df.queryExecution.analyzed
+        .exists(_.expressions.exists(_.exists(_.isInstanceOf[org.apache.spark.sql.catalyst.expressions.ScalaUDF])))
+      assert(!hasUdf(c.headings))
+      assert(!hasUdf(v.select(MarcContext.normalizeCol(col("v")), MarcContext.sortKeyCol(col("v")))))
+      val uncached = MarcContext.authHeadings(MarcSchema.toDataset(s2, Seq(auth1, auth2)).toDF())
+      assert(!readsCache(uncached))
+      assert(c.headings.collect().toSet == uncached.collect().toSet)
+    } finally prev match {
+      case Some(p) => SparkSession.setActiveSession(p)
+      case None => SparkSession.clearActiveSession()
+    }
   }
 
   test("setXref on a non-auth-controlled code stores a string literal") {

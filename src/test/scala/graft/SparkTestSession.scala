@@ -12,6 +12,7 @@ object SparkTestSession {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
+    Bench.silenceTeardownNoise()
     s
   }
 }
