@@ -64,7 +64,6 @@ object DlxConfig {
   val bibTypeMap: Map[String, (String, String, String)] = Map(
     "speech" -> (("089", "b", "B22")),
     "vote" -> (("089", "b", "B23")))
-  val authTypeMap: Map[String, (String, String, String)] = Map.empty
 
   /** logical field -> ordered (tag -> code groups); each code group
     * string is a set of subfield codes joined with spaces
@@ -146,21 +145,9 @@ object DlxConfig {
   def authoritySourceTag(recordType: String, tag: String, code: String): Option[String] =
     authorityControlled(recordType).get(tag).flatMap(_.get(code))
 
-  def authHeadingTags: Set[String] =
-    (bibAuthorityControlled.values ++ authAuthorityControlled.values)
-      .flatMap(_.values).toSet
-
-  def authLinkedCodes(headingTag: String): Seq[String] =
-    (bibAuthorityControlled.toSeq ++ authAuthorityControlled.toSeq)
-      .flatMap(_._2.toSeq)
-      .collect { case (code, tag) if tag == headingTag => code }
-
   def languageSourceTag(tag: String, language: String): Option[String] =
     authLanguageTag.get(tag).flatMap(_.get(language))
 
   def logicalFields(recordType: String): Seq[(String, Seq[(String, Seq[String])])] =
     if (recordType == "bib") bibLogicalFields else authLogicalFields
-
-  def typeMap(recordType: String): Map[String, (String, String, String)] =
-    if (recordType == "bib") bibTypeMap else authTypeMap
 }

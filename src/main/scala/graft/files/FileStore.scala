@@ -1,6 +1,6 @@
 package graft.files
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
@@ -104,8 +104,6 @@ final class FileStore(spark: SparkSession, basePath: String, blobs: BlobStore,
     numBuckets: Int = 64, lockWaitMs: Long = 600000L) {
   import spark.implicits._
 
-  private val tablePath = s"$basePath/files"
-
   private val canonicalCols = Seq("_id", "filename", "identifiers", "languages",
     "mimetype", "size", "source", "timestamp", "uri", "user", "updated")
 
@@ -114,81 +112,21 @@ final class FileStore(spark: SparkSession, basePath: String, blobs: BlobStore,
   private def bucketCol: org.apache.spark.sql.Column =
     pmod(conv(substring(col("_id"), 1, 4), 16, 10).cast("long"), lit(numBuckets.toLong))
 
-  /** One read plan per table generation (same rationale as MarcStore:
-    * built by [[graft.store.StoreTables.read]], reused until the next
-    * write); invalidated by any same-JVM store's write via the shared
-    * [[graft.store.TableGenerations]]. */
-  private var cached: Option[(Long, DataFrame)] = None
+  private val table = new graft.store.BucketTable(spark, s"$basePath/files",
+    spark.emptyDataset[FileRecord].toDF().withColumn("id_bucket", lit(0L)).limit(0))
 
-  private def readRaw(): DataFrame = synchronized {
-    val gen = graft.store.TableGenerations.generation(tablePath)
-    cached match {
-      case Some((g, df)) if g == gen => df
-      case _ =>
-        val empty = spark.emptyDataset[FileRecord].toDF().withColumn("id_bucket", lit(0L)).limit(0)
-        val df = graft.store.StoreTables.read(spark, tablePath, empty.schema).getOrElse(empty)
-        cached = Some((gen, df))
-        df
-    }
-  }
+  def read(): DataFrame = table.read.select(canonicalCols.map(col): _*)
 
-  def read(): DataFrame = readRaw().select(canonicalCols.map(col): _*)
-
-  /** Upsert metadata rows by checksum: rewrite ONLY the id buckets the
-    * batch touches (stage → swap) — write cost is O(touched buckets),
-    * never O(table). CRASH-SAFE with the same commit-journal protocol
-    * as MarcStore.swapBuckets (round-11: a crash between two bucket
-    * renames used to leave the file table permanently mixed): staging
-    * completes, the journal is written atomically (tmp + rename), only
-    * then do renames start; [[recoverStaging]] — at store open and
-    * before every upsert — rolls forward iff the journal exists. */
+  /** Upsert metadata rows by checksum with the bucket table's
+    * crash-safe commit: write cost is O(touched buckets), never
+    * O(table). */
   private def upsert(meta: DataFrame): Unit =
-      graft.store.StoreLock.withLock(basePath, lockWaitMs) {
-    recoverStaging()
-    val withBucket = meta.select(canonicalCols.map(col): _*)
-      .withColumn("id_bucket", bucketCol)
-    val touched = withBucket.select("id_bucket").distinct().as[Long].collect()
-    val survivors = readRaw()
-      .where(col("id_bucket").isin(touched: _*))
-      .join(meta.select(col("_id").as("m_id")), col("_id") === col("m_id"), "left_anti")
-      .drop("m_id")
-    val staging = tablePath + "_staging"
-    rmDir(new java.io.File(staging))
-    survivors.unionByName(withBucket)
-      .repartition(math.max(touched.length, 1), col("id_bucket"))
-      .write.partitionBy("id_bucket").mode(SaveMode.Overwrite).parquet(staging)
-    graft.store.SwapJournal.write(staging, touched.toSeq.map(b =>
-      s"$b,${if (new java.io.File(s"$staging/id_bucket=$b").exists()) 1 else 0}"))
-    new java.io.File(tablePath).mkdirs()
-    for (b <- touched) {
-      val dst = new java.io.File(s"$tablePath/id_bucket=$b")
-      rmDir(dst)
-      val src = new java.io.File(s"$staging/id_bucket=$b")
-      if (src.exists()) require(src.renameTo(dst), s"bucket swap failed: $src -> $dst")
+    graft.store.StoreLock.withLock(basePath, lockWaitMs) {
+      table.upsert(meta.select(canonicalCols.map(col): _*), bucketCol)
     }
-    rmDir(new java.io.File(staging))
-    graft.store.TableGenerations.bump(tablePath)
-    spark.catalog.refreshByPath(tablePath)
-  }
-
-  /** Roll a dangling `files_staging` forward (journal present →
-    * staging complete; finish the renames) or back (journal absent or
-    * malformed → no rename ever started; drop it). Idempotent. */
-  private def recoverStaging(): Unit = {
-    val staging = new java.io.File(tablePath + "_staging")
-    if (!staging.exists()) return
-    graft.store.SwapJournal.read(staging.getPath).foreach { es =>
-      graft.store.SwapJournal.rollForwardBuckets(staging.getPath, tablePath, es)
-    }
-    rmDir(staging)
-    graft.store.TableGenerations.bump(tablePath)
-    spark.catalog.refreshByPath(tablePath)
-  }
 
   // store open: finish or roll back any swap a dead writer left behind
-  graft.store.StoreLock.withLock(basePath, lockWaitMs) { recoverStaging() }
-
-  private def rmDir(f: java.io.File): Unit = graft.store.SwapJournal.deleteRecursively(f)
+  graft.store.StoreLock.withLock(basePath, lockWaitMs) { table.recover() }
 
   def md5Hex(data: Array[Byte]): String =
     java.security.MessageDigest.getInstance("MD5").digest(data)

@@ -119,12 +119,6 @@ final case class MarcRecord(
   def leader: String =
     fields.collectFirst { case ControlField("000", v) => v }.getOrElse("")
 
-  def controlFields: Vector[ControlField] =
-    fields.collect { case f: ControlField => f }.sortBy(_.tag)
-
-  def dataFields: Vector[DataField] =
-    fields.collect { case f: DataField => f }.sortBy(_.tag)
-
   def getFields(tags: String*): Vector[Field] = {
     val sorted = fields.sortBy(_.tag)
     if (tags.isEmpty) sorted else sorted.filter(f => tags.contains(f.tag))
@@ -378,8 +372,6 @@ final case class MarcRecord(
     }
     rec
   }
-
-  def isDiff(other: MarcRecord): Boolean = Diff(this, other).different
 }
 
 /** Field-multiset comparison (reference Diff,

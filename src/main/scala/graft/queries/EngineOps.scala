@@ -174,8 +174,8 @@ object EngineOps {
   // q167 — manual salted skew join
   // ---------------------------------------------------------------
 
-  /** Salting, the manual skew-join technique (complementing the
-    * MEASURED AQE skew handling in SKEW.md): a deliberately hot fact
+  /** Salting, the manual skew-join technique (complementing AQE's
+    * runtime skew-join handling): a deliberately hot fact
     * key (~30% of orders collapse onto customer 0) joins the customer
     * dimension after the fact side fans its hot key across 16 salt
     * values and the dimension replicates 16× — the one hot hash

@@ -403,7 +403,7 @@ object RealMarc {
       val t1 = java.sql.Timestamp.from(java.time.Instant.parse("2021-01-01T00:00:00Z"))
       val t2 = java.sql.Timestamp.from(java.time.Instant.parse("2021-02-01T00:00:00Z"))
       val t3 = java.sql.Timestamp.from(java.time.Instant.parse("2021-03-01T00:00:00Z"))
-      val baseDir = graft.store.SwapJournal.scratchDir("graft_q196")
+      val baseDir = graft.store.BucketTable.scratchDir("graft_q196")
       val store = new graft.store.MarcStore(s, baseDir.toString,
         numBuckets = StoreOps.gateBuckets)
       store.commit(marcAuths(s).as[graft.spark.MarcRow](marcRowEncoder),
@@ -447,7 +447,7 @@ object RealMarc {
       val t1 = java.sql.Timestamp.from(java.time.Instant.parse("2022-01-01T00:00:00Z"))
       val t2 = java.sql.Timestamp.from(java.time.Instant.parse("2022-02-01T00:00:00Z"))
       val t3 = java.sql.Timestamp.from(java.time.Instant.parse("2022-03-01T00:00:00Z"))
-      val baseDir = graft.store.SwapJournal.scratchDir("graft_q201")
+      val baseDir = graft.store.BucketTable.scratchDir("graft_q201")
       val store = new graft.store.MarcStore(s, baseDir.toString,
         numBuckets = StoreOps.gateBuckets, maxChangedAuths = 10)
       store.commit(marcAuths(s).as[graft.spark.MarcRow](marcRowEncoder),

@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.spark.{MarcRow, MarcSchema}
-import graft.store.MarcStore
+import graft.store.{BucketTable, MarcStore}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import Tables._
@@ -71,7 +71,7 @@ object StoreOps {
   private def lifecycleStore(s: SparkSession, dir: String): MarcStore =
     storeCache.getOrElseUpdate((s, dir), {
       import MarcSchema.marcRowEncoder
-      val base = graft.store.SwapJournal.scratchDir("graft_q36")
+      val base = graft.store.BucketTable.scratchDir("graft_q36")
       val store = new MarcStore(s, base, numBuckets = gateBuckets)
       store.commit(batch(s, dir, 97L, "").as[MarcRow], user = "alice", now = ts1)
       store.commit(batch(s, dir, 194L, "X-").as[MarcRow], user = "bob", now = ts2)
@@ -143,7 +143,7 @@ object StoreOps {
     * version-1 title (revert-to-v1 content). */
   def q55Restore(s: SparkSession, dir: String): DataFrame = {
     import MarcSchema.marcRowEncoder
-    val base = graft.store.SwapJournal.scratchDir("graft_q55")
+    val base = graft.store.BucketTable.scratchDir("graft_q55")
     val store = new MarcStore(s, base, numBuckets = gateBuckets)
     store.commit(batch(s, dir, 1940L, "").as[MarcRow], user = "alice", now = ts1)
     // restore/revert need three CONCRETE ids (the reference API is
@@ -239,7 +239,7 @@ object StoreOps {
   private def cascadeSeedStore(s: SparkSession, dir: String): (MarcStore, String) =
     cascadeStoreCache.getOrElseUpdate((s, dir), {
       import MarcSchema.marcRowEncoder
-      val base = graft.store.SwapJournal.scratchDir("graft_q62seed")
+      val base = graft.store.BucketTable.scratchDir("graft_q62seed")
       val store = new MarcStore(s, base, numBuckets = gateBuckets)
       store.commit(profAuthBatch(s, dir).as[MarcRow], user = "alice", now = ts1)
       store.commit(profBibBatch(s, dir).as[MarcRow], user = "bob", now = ts2)
@@ -287,7 +287,7 @@ object StoreOps {
   private def importedFileStore(s: SparkSession, dir: String): graft.files.FileStore =
     fileStoreCache.getOrElseUpdate((s, dir), {
       import graft.files.{FileStore, HadoopBlobStore}
-      val base = graft.store.SwapJournal.scratchDir("graft_q40")
+      val base = graft.store.BucketTable.scratchDir("graft_q40")
       val store = new FileStore(s, base, new HadoopBlobStore(s"file://$base/blobs"),
         numBuckets = gateBuckets)
       val files = orders(s, dir).where(col("o_orderkey") % 485 === 0)
@@ -355,7 +355,7 @@ object StoreOps {
     * so only the id SET is compared). */
   def q97AssignIds(s: SparkSession, dir: String): DataFrame = {
     import MarcSchema.marcRowEncoder
-    val base = graft.store.SwapJournal.scratchDir("graft_q97")
+    val base = graft.store.BucketTable.scratchDir("graft_q97")
     val store = new MarcStore(s, base, numBuckets = gateBuckets)
     store.commit(batch(s, dir, 1940L, "").as[MarcRow], user = "alice", now = ts1)
     val fresh = orders(s, dir)
@@ -381,7 +381,7 @@ object StoreOps {
     * bibcount+authcount==0 DeleteOne outcome. */
   def q100BrowseEviction(s: SparkSession, dir: String): DataFrame = {
     import MarcSchema.marcRowEncoder
-    val base = graft.store.SwapJournal.scratchDir("graft_q100")
+    val base = graft.store.BucketTable.scratchDir("graft_q100")
     val store = new MarcStore(s, base, numBuckets = gateBuckets)
     val raw = orders(s, dir).where(col("o_orderkey") % 1940 === 0)
       .select(
@@ -427,7 +427,7 @@ object StoreOps {
     // clone — the merge's bucket swaps and log appends never touch the
     // seed q62 reads
     val seedBase = cascadeSeedStore(s, dir)._2
-    val base = graft.store.SwapJournal.scratchDir("graft_q102")
+    val base = graft.store.BucketTable.scratchDir("graft_q102")
     copyDir(java.nio.file.Paths.get(seedBase), java.nio.file.Paths.get(base))
     val store = new MarcStore(s, base, numBuckets = gateBuckets)
     store.merge(gaining = 1000L, losing = 500L, user = "editor2", now = ts4)
@@ -488,7 +488,7 @@ object StoreOps {
   private def crashedStore(s: SparkSession, dir: String): MarcStore =
     crashStoreCache.getOrElseUpdate((s, dir), {
       import MarcSchema.marcRowEncoder
-      val baseDir = graft.store.SwapJournal.scratchDir("graft_q199")
+      val baseDir = graft.store.BucketTable.scratchDir("graft_q199")
       val base = baseDir.toString
       var store = new MarcStore(s, base, numBuckets = gateBuckets)
       store.commit(batch(s, dir, 97L, "").as[MarcRow], user = "alice", now = ts1)
@@ -499,13 +499,13 @@ object StoreOps {
       val points = Seq("post_staging", "post_journal", "mid_rename", "post_rename",
         "post_history")
       for ((p, i) <- points.zipWithIndex) {
-        MarcStore.failpoint = Some(p)
+        BucketTable.failpoint = Some(p)
         val crashed =
           try {
             store.commit(batch(s, dir, 97L, s"C$i-").as[MarcRow], user = s"crash_$p",
               now = new java.sql.Timestamp(ts2.getTime + i * 1000L))
             false
-          } catch { case _: MarcStore.CrashInjected => true }
+          } catch { case _: BucketTable.CrashInjected => true }
         require(crashed, s"failpoint $p did not fire")
         // "reopen": a fresh store on the same path = the recovery sweep
         store = new MarcStore(s, base, numBuckets = gateBuckets)
@@ -629,7 +629,7 @@ object StoreOps {
   private def importedMarcStore(s: SparkSession): MarcStore =
     importStoreCache.getOrElseUpdate(s, {
       import MarcSchema.marcRowEncoder
-      val baseDir = graft.store.SwapJournal.scratchDir("graft_q202")
+      val baseDir = graft.store.BucketTable.scratchDir("graft_q202")
       val base = baseDir.toString
       // the CLI opens the store with default sizing — seed the auth
       // dimension through the same shape

@@ -8,7 +8,9 @@ import org.apache.spark.sql.functions._
   * write path (Marc.commit / delete / restore / history / id counters,
   * dlx/marc/__init__.py:856-1310; SURVEY §3 EP3).
   *
-  * Layout (designed for 100 TB — see SCALING.md):
+  * Layout (designed for 100 TB — see SCALING.md). Each table is a
+  * [[BucketTable]], which owns its read plan and its crash-safe
+  * stage → journal → rename commit:
   *  - live tables are parquet partitioned by `id_bucket`
   *    (pmod(_id, numBuckets)): a commit rewrites ONLY the buckets its
   *    batch touches (staged, then swapped in by rename), so write cost
@@ -26,79 +28,64 @@ import org.apache.spark.sql.functions._
   *      batch form of the reference's $inc counter; no global window,
   *      no single-task funnel),
   *   2. auth-validate (reference defaults auth_check=True),
-  *   3. rewrite the touched live buckets (keep newest per _id),
+  *   3. rewrite the touched live buckets (the batch's row replaces
+  *      the live row of each _id),
   *   4. append one history row per version,
   *   5. for auth commits whose heading changed: cascade to attached
   *      bibs (retag / drop / add / refresh values) and re-commit them,
   *      exactly the reference's update_attached_records default.
+  *
+  * This class keeps the record semantics: audit columns, validation,
+  * versioned history rows, the cascade, merge, delete and restore.
   */
 final class MarcStore(spark: SparkSession, basePath: String, numBuckets: Int = 64,
     lockWaitMs: Long = 600000L, maxChangedAuths: Int = 100000) {
   import spark.implicits._
   import MarcSchema.marcRowEncoder
 
-  private def tablePath(recordType: String) = s"$basePath/${recordType}s"
-  private def historyPath(recordType: String) = s"$basePath/${recordType}_history"
-
   private val canonicalCols = Seq("record_type", "_id", "created", "updated",
     "created_user", "user", "basket", "leader", "controlfields", "datafields",
     "text", "words", "logical")
 
-  /** One DataFrame per table GENERATION: a plan built once is reused
-    * by every read of the same unchanged table inside and across
-    * commits (prev-audit join, survivor scan, cascade attach scan,
-    * read-after-write searches) until the table's next write. Building
-    * it lists the table's files on the driver ([[StoreTables.read]]),
-    * so a fresh generation costs a directory walk, not a Spark job. The
-    * generation counter lives in the companion so every MarcStore
-    * instance in the JVM on the same path sees the invalidation
-    * (writes from OUTSIDE the JVM are out of scope — the store is the
-    * table's writer). `empty` is the plan of a table with no data file
-    * and supplies the schema the store writes. */
-  private val dfCache = scala.collection.mutable.Map.empty[String, (Long, DataFrame)]
+  private def bucketOf: Column = pmod(col("_id"), lit(numBuckets.toLong))
 
-  private def cachedPlan(path: String)(empty: => DataFrame): DataFrame = synchronized {
-    val gen = MarcStore.generation(path)
-    dfCache.get(path) match {
-      case Some((g, df)) if g == gen => df
-      case _ =>
-        val e = empty
-        val df = StoreTables.read(spark, path, e.schema).getOrElse(e)
-        dfCache(path) = (gen, df)
-        df
-    }
+  private val tables = scala.collection.mutable.Map.empty[String, BucketTable]
+
+  private def table(name: String)(make: String => BucketTable): BucketTable = synchronized {
+    tables.getOrElseUpdate(name, make(s"$basePath/$name"))
   }
 
-  private def invalidate(path: String): Unit = synchronized {
-    MarcStore.bumpGeneration(path)
-    dfCache.remove(path)
-    val auth = new java.io.File(path) == new java.io.File(tablePath("auth"))
-    // unpersist the old generation's heading dimension before
-    // refreshByPath, which would otherwise re-list and recache it,
-    // then register the new generation's (lazy: no job)
-    if (auth) dropHeadings()
-    spark.catalog.refreshByPath(path)
-    if (auth) liveAuthHeadings
+  /** A record type's live table, with its history table committed
+    * under the same journal. An auth write swaps the heading dimension:
+    * the old generation's is unpersisted before `refreshByPath`, which
+    * would otherwise re-list and recache it, and the new generation's
+    * registered after it (lazy: no job). */
+  private def live(rt: String): BucketTable = table(s"${rt}s") { path =>
+    if (rt == "auth")
+      new BucketTable(spark, path, emptyLive, Some(history(rt)),
+        refresh => { dropHeadings(); refresh(); liveAuthHeadings })
+    else new BucketTable(spark, path, emptyLive, Some(history(rt)))
+  }
+
+  private def emptyLive: DataFrame =
+    spark.emptyDataset[MarcRow].toDF().withColumn("id_bucket", lit(0L)).limit(0)
+
+  private def history(rt: String): BucketTable = table(s"${rt}_history") { path =>
+    new BucketTable(spark, path, spark.emptyDataset[MarcRow].toDF()
+      .withColumn("version_no", lit(0L))
+      .withColumn("action", lit(""))
+      .limit(0))
   }
 
   /** live table with the physical id_bucket column (partition pruning
     * happens on filters against it); package-visible for the read
     * parity spec. */
-  private[graft] def readRaw(recordType: String): DataFrame =
-    cachedPlan(tablePath(recordType)) {
-      spark.emptyDataset[MarcRow].toDF().withColumn("id_bucket", lit(0L)).limit(0)
-    }
+  private[graft] def readRaw(recordType: String): DataFrame = live(recordType).read
 
   def read(recordType: String): Dataset[MarcRow] =
     readRaw(recordType).select(canonicalCols.map(col): _*).as[MarcRow]
 
-  def readHistory(recordType: String): DataFrame =
-    cachedPlan(historyPath(recordType)) {
-      spark.emptyDataset[MarcRow].toDF()
-        .withColumn("version_no", lit(0L))
-        .withColumn("action", lit(""))
-        .limit(0)
-    }
+  def readHistory(recordType: String): DataFrame = history(recordType).read
 
   /** max _id over live ∪ history (reference Marc.max_id,
     * dlx/marc/__init__.py:474-483). */
@@ -135,10 +122,10 @@ final class MarcStore(spark: SparkSession, basePath: String, numBuckets: Int = 6
   }
 
   // The live-auth heading dimension: exactly one, the current auth
-  // table generation's, persisted. `invalidate` swaps it at every auth
-  // write; the persist is lazy, so its first reader materializes it —
-  // after a heading change that is the cascade's refresh collect,
-  // inside the write. Validation and merge read it here; the compiler's
+  // table generation's, persisted. The auth table's refresh hook (see
+  // `live`) swaps it at every auth write; the persist is lazy, so its
+  // first reader materializes it — after a heading change that is the
+  // cascade's refresh collect, inside the write. Validation and merge read it here; the compiler's
   // `headings`, AuthOps.partialLookup, resolveLinkedAuto and
   // InitIndexes build the same plan over `read("auth")`, so Spark's
   // cache manager hands them this copy. The generation check covers a
@@ -146,7 +133,7 @@ final class MarcStore(spark: SparkSession, basePath: String, numBuckets: Int = 6
   private var headings: Option[(Long, DataFrame)] = None
 
   private def liveAuthHeadings: DataFrame = synchronized {
-    val gen = MarcStore.generation(tablePath("auth"))
+    val gen = live("auth").generation
     headings match {
       case Some((g, df)) if g == gen => df
       case _ =>
@@ -240,7 +227,14 @@ final class MarcStore(spark: SparkSession, basePath: String, numBuckets: Int = 6
   /** Upsert a batch: keep the incoming row for each _id, keep
     * untouched rows, stamp audit columns, append history. Defaults
     * mirror the reference (dlx/marc/__init__.py:857): auth_check on,
-    * update_attached on. */
+    * update_attached on.
+    *
+    * The batch holds ONE record type and each existing `_id` at most
+    * once (rows with `_id` -1 are new records and get fresh ids); a
+    * batch that mixes record types or repeats an `_id` is refused with
+    * an IllegalArgumentException before anything is written. The
+    * reference commits one record at a time, so a repeat has no single
+    * meaning: commit the repeats in separate batches, in order. */
   def commit(recs: Dataset[MarcRow], user: String,
       now: java.sql.Timestamp = java.sql.Timestamp.from(java.time.Instant.now()),
       authCheck: Boolean = true, updateAttached: Boolean = true,
@@ -264,7 +258,8 @@ final class MarcStore(spark: SparkSession, basePath: String, numBuckets: Int = 6
       min(col("record_type")).as("rt"),
       max(col("record_type")).as("rt_max"),
       count(when(col("_id") === -1L, lit(1))).as("need_ids"),
-      collect_set(pmod(col("_id"), lit(numBuckets.toLong))).as("buckets")) ++
+      size(collect_set(when(col("_id") =!= -1L, col("_id")))).as("distinct_ids"),
+      collect_set(bucketOf).as("buckets")) ++
       (if (authCheck) violationProbeCols else Seq.empty)
     val stats = recsCk.toDF().agg(count(lit(1)).as("n"), baseCols: _*).head()
     if (stats.getAs[Long]("n") == 0L) return
@@ -275,6 +270,12 @@ final class MarcStore(spark: SparkSession, basePath: String, numBuckets: Int = 6
       throw new IllegalArgumentException(
         s"Commit batch mixes record types ($rt, ${stats.getAs[String]("rt_max")}): " +
           "commit each record type separately")
+    val needIds = stats.getAs[Long]("need_ids")
+    // a repeated _id would fan the prev-audit join out into several
+    // live rows with equal version numbers
+    if (stats.getAs[Int]("distinct_ids") != stats.getAs[Long]("n") - needIds)
+      throw new IllegalArgumentException(
+        s"Commit batch repeats a $rt _id: commit each record once per batch")
     if (authCheck) {
       // probe-directed (round 14): a batch with no violation candidates
       // at all skips the validation job; a clean-but-xref-carrying
@@ -285,7 +286,6 @@ final class MarcStore(spark: SparkSession, basePath: String, numBuckets: Int = 6
       else if (stats.getAs[Long]("v_ctrl_xref") == 1L)
         authValidate(recsCk, rt, allRules = false)
     }
-    val needIds = stats.getAs[Long]("need_ids")
     val incomingRaw = assignIds(recsCk, rt, needIds)
     val knownTouched =
       if (needIds == 0L) Some(stats.getSeq[Long](stats.fieldIndex("buckets"))) else None
@@ -339,8 +339,8 @@ final class MarcStore(spark: SparkSession, basePath: String, numBuckets: Int = 6
         else Some(Right(changes.localCheckpoint(true)))
       } else None
 
-    writeLiveBuckets(incoming.toDF(), rt, knownTouched,
-      history = Some((versionedHistory(incoming.toDF(), rt, action, now), historyPath(rt))))
+    live(rt).upsert(incoming.toDF(), bucketOf, knownTouched,
+      Some(versionedHistory(incoming.toDF(), rt, action, now)))
 
     pendingCascade match {
       case Some(Left(rows)) if rows.nonEmpty => cascadeToAttached(rows, user, now)
@@ -378,191 +378,18 @@ final class MarcStore(spark: SparkSession, basePath: String, numBuckets: Int = 6
         filter(newCodes, c => !array_contains(oldCodes, c)).as("added"))
   }
 
-  /** Rewrite ONLY the buckets the batch touches: each touched bucket =
-    * surviving old rows + incoming rows. The replacement is written
-    * ONCE to a staging dir and the bucket directories swap in by
-    * rename — no block-manager materialization, and the read of the
-    * old bucket files completes before any of them is replaced.
-    * (On a rename-less object store, dynamic partition overwrite of a
-    * localCheckpoint'd plan is the drop-in alternative.) */
-  private def writeLiveBuckets(incoming: DataFrame, recordType: String,
-      knownTouched: Option[Seq[Long]] = None,
-      history: Option[(DataFrame, String)] = None): Unit = {
-    val path = tablePath(recordType)
-    val withBucket = incoming.withColumn("id_bucket", pmod(col("_id"), lit(numBuckets.toLong)))
-    val touched = knownTouched.getOrElse(
-      withBucket.select("id_bucket").distinct().as[Long].collect().toSeq)
-    val survivors = readRaw(recordType)
-      .where(col("id_bucket").isin(touched: _*)) // partition-pruned scan
-      .join(incoming.select(col("_id").as("i_id")), col("_id") === col("i_id"), "left_anti")
-      .select((canonicalCols :+ "id_bucket").map(col): _*)
-    swapBuckets(path, survivors.unionByName(withBucket), touched, history)
-  }
-
-  /** stage → swap, CRASH-SAFE (round-10, tightened round-11): the
-    * replacement buckets AND the commit's history rows are both staged
-    * (`<table>_staging/id_bucket=N`, `<history>_staging/`), then ONE
-    * journal (`_staging/_commit_journal`: a "bucket,hasData" line per
-    * touched bucket plus a trailing "history,0|1" line) is written —
-    * to a temp name and atomically renamed into place, so a torn
-    * write can never present as a complete journal — and only then do
-    * the per-bucket renames and the history-file promotion start.
-    * `recoverStaging` — run at store open (under the store lock) and
-    * at the start of every swap — has an unambiguous rule: journal
-    * ABSENT or unparseable → the crash predates any rename, roll BACK
-    * (drop both stagings; live table and history are untouched);
-    * journal PRESENT → staging is complete, roll FORWARD (idempotently
-    * finish the renames — a bucket whose staged dir is gone was
-    * already moved — and promote any still-staged history files). A
-    * reader through a recovered store therefore sees the OLD (buckets,
-    * history) pair or the NEW one, never a mix: the round-10 residual
-    * window (history appended after the swap, lost on a crash between
-    * them) is closed because the version rows commit under the same
-    * journal. Gated by q199 + StoreStress crash mode at every injected
-    * point, including post_rename (= after swap, before history
-    * promotion — exactly the old window) and post_history. */
-  private def swapBuckets(path: String, replacement: DataFrame, touched: Seq[Long],
-      history: Option[(DataFrame, String)] = None): Unit = {
-    val staging = path + "_staging"
-    recoverStaging(path) // finish or roll back any dangling prior swap
-    rmDir(new java.io.File(staging))
-    // cluster rows by bucket before the write: ONE file per touched
-    // bucket instead of one per shuffle task — without this, file
-    // count grows ~taskCount per commit and reads degrade
-    // history rows staged BEFORE the journal: the journal commits both
-    // (reads of the prior history for version numbering complete here,
-    // strictly before any rename). The two staging writes read
-    // DISJOINT state (live buckets vs prior history, plus the pinned
-    // batch), so they run CONCURRENTLY — a commit pays max(), not
-    // sum(), of the two walls.
-    val histStaged = history.map { case (rows, hPath) =>
-      rmDir(new java.io.File(hPath + "_staging"))
-      scala.concurrent.Future {
-        // coalesce bounds files per history append
-        rows.coalesce(8).write.mode(SaveMode.Overwrite).parquet(hPath + "_staging")
-      }(MarcStore.stagingEc)
-    }
-    def awaitHist(): Unit = histStaged.foreach(f =>
-      scala.concurrent.Await.result(f, scala.concurrent.duration.Duration.Inf))
-    try replacement.repartition(math.max(touched.size, 1), col("id_bucket"))
-      .write.partitionBy("id_bucket").mode(SaveMode.Overwrite).parquet(staging)
-    catch { case e: Throwable =>
-      // never leave an in-flight history write racing the cleanup a
-      // failed swap triggers — drain it (ignoring its own failure)
-      try awaitHist() catch { case _: Throwable => () }
-      throw e
-    }
-    awaitHist()
-    maybeCrash("post_staging")
-    SwapJournal.write(staging, touched.map(b =>
-      s"$b,${if (new java.io.File(s"$staging/id_bucket=$b").exists()) 1 else 0}") :+
-      s"history,${if (history.isDefined) 1 else 0}")
-    maybeCrash("post_journal")
-    new java.io.File(path).mkdirs()
-    var renamed = 0
-    for (b <- touched) {
-      val dst = new java.io.File(s"$path/id_bucket=$b")
-      rmDir(dst)
-      val src = new java.io.File(s"$staging/id_bucket=$b")
-      if (src.exists()) require(src.renameTo(dst), s"bucket swap failed: $src -> $dst")
-      renamed += 1
-      if (renamed == 1) maybeCrash("mid_rename")
-    }
-    maybeCrash("post_rename") // live swapped, history not yet promoted
-    history.foreach { case (_, hPath) => promoteStagedHistory(hPath) }
-    maybeCrash("post_history")
-    rmDir(new java.io.File(staging))
-    invalidate(path)
-  }
-
-  /** Move the staged history part files into the live history dir —
-    * an append by file promotion, idempotent under recovery re-runs
-    * (part names are job-unique; a file is either still staged or
-    * already moved, never both). */
-  private def promoteStagedHistory(hPath: String): Unit = {
-    val st = new java.io.File(hPath + "_staging")
-    if (!st.exists()) return
-    val dst = new java.io.File(hPath)
-    dst.mkdirs()
-    val fs = st.listFiles()
-    if (fs != null)
-      fs.iterator.filter(f => f.isFile && f.getName.endsWith(".parquet")).foreach { f =>
-        val t = new java.io.File(dst, f.getName)
-        rmDir(t)
-        require(f.renameTo(t), s"history promote failed: $f -> $t")
-      }
-    rmDir(st)
-    invalidate(hPath)
-  }
-
-  private def maybeCrash(point: String): Unit =
-    if (MarcStore.failpoint.contains(point)) {
-      MarcStore.failpoint = None // one-shot, so recovery itself runs clean
-      throw new MarcStore.CrashInjected(point)
-    }
-
-  /** The history dir paired with a live table path (`<base>/<rt>s` →
-    * `<base>/<rt>_history`); None for non-live-table paths. */
-  private def historyPathOf(tablePath: String): Option[String] = {
-    val f = new java.io.File(tablePath)
-    val name = f.getName
-    if (name.endsWith("_history") || !name.endsWith("s")) None
-    else Some(new java.io.File(f.getParentFile, name.dropRight(1) + "_history").getPath)
-  }
-
-  /** Roll a dangling `_staging` forward (journal present → staging was
-    * complete; finish the renames and promote staged history) or back
-    * (journal absent or malformed → no rename ever started; drop both
-    * stagings). Idempotent. */
-  private def recoverStaging(path: String): Unit = {
-    val hStaging = historyPathOf(path).map(h => new java.io.File(h + "_staging"))
-    val staging = new java.io.File(path + "_staging")
-    if (!staging.exists()) {
-      // an orphan history staging (no live staging → no journal → the
-      // crash predates any rename) rolls back
-      hStaging.filter(_.exists()).foreach(rmDir)
-      return
-    }
-    // a malformed, entry-less or unparseable journal is treated as
-    // ABSENT (roll back): the journal is written fsync'd + atomically
-    // (SwapJournal.write), so a torn journal can only be pre-protocol
-    // debris, never a post-rename state (ADVICE r10, tightened by the
-    // r11 review for OS-crash torn content)
-    SwapJournal.read(staging.getPath) match {
-      case Some(es) =>
-        SwapJournal.rollForwardBuckets(staging.getPath, path,
-          es.filter(_._1 != "history"))
-        if (es.exists { case (k, v) => k == "history" && v })
-          historyPathOf(path).foreach(promoteStagedHistory)
-        else hStaging.filter(_.exists()).foreach(rmDir)
-      case None =>
-        hStaging.filter(_.exists()).foreach(rmDir)
-    }
-    rmDir(staging)
-    invalidate(path)
-  }
-
   /** Finish or roll back EVERY dangling swap under this base. Runs at
     * store open AND at the start of every write entry point (commit /
-    * delete / restore / merge), under the store lock in both cases —
-    * the r11 review found that recovering only inside swapBuckets is
-    * too late for a SAME-INSTANCE retry: by then the retry's read
-    * plans (prev-audit join, survivors scan, history version counts)
-    * were already built against the pre-recovery file listing, so the
-    * retry could duplicate version numbers and silently revert the
-    * recovered commit's rows in the buckets it touches. Recovery must
-    * precede ANY plan construction of a write. No-op (a directory
-    * listing) when nothing dangles. History stagings recover THROUGH
-    * their table's recoverStaging (the live journal decides their
-    * fate), so `<rt>_history_staging` maps back to `<rt>s`. */
-  private def recoverAllStaging(): Unit = {
-    val names = new java.io.File(basePath).listFiles()
-    if (names != null)
-      names.iterator.filter(f => f.isDirectory && f.getName.endsWith("_staging"))
-        .map(_.getPath.stripSuffix("_staging"))
-        .map(p => if (p.endsWith("_history")) p.stripSuffix("_history") + "s" else p)
-        .toSet[String]
-        .foreach(recoverStaging)
+    * delete / restore / merge), under the store lock in both cases:
+    * recovering only inside the swap is too late for a SAME-INSTANCE
+    * retry — by then the retry's read plans (prev-audit join, survivors
+    * scan, history version counts) were already built against the
+    * pre-recovery file listing, so the retry could duplicate version
+    * numbers and silently revert the recovered commit's rows in the
+    * buckets it touches. Recovery must precede ANY plan construction of
+    * a write. `<rt>_history_staging` recovers through `<rt>s`. */
+  private def recoverAllStaging(): Unit = BucketTable.recoverAll(basePath) { name =>
+    live(if (name.endsWith("_history")) name.stripSuffix("_history") else name.stripSuffix("s"))
   }
 
   // store open: finish or roll back any swap a dead writer left behind
@@ -571,8 +398,6 @@ final class MarcStore(spark: SparkSession, basePath: String, numBuckets: Int = 6
   // then register the heading dimension of the auth table as found
   StoreLock.withLock(basePath, lockWaitMs) { recoverAllStaging() }
   liveAuthHeadings
-
-  private def rmDir(f: java.io.File): Unit = SwapJournal.deleteRecursively(f)
 
   // ---- attach scans, both regimes (exposed package-private for the
   // q201 plan pin in tools.ExplainCheck)
@@ -620,7 +445,7 @@ final class MarcStore(spark: SparkSession, basePath: String, numBuckets: Int = 6
     // (dlx/marc/__init__.py:1205): one row per (attached record,
     // triggering auth) pair. Appended BEFORE the re-commit so the scan
     // reads the same pre-swap files the cascade plan references.
-    appendLog("auth_linked_update_log",
+    appendLog(authLinkedUpdateLogTable,
       attached.select(col("_id").as("record_id"),
           explode(array_distinct(flatten(transform(col("datafields"), f =>
             filter(transform(f.getField("subfields"), sf => sf.getField("xref")),
@@ -641,7 +466,7 @@ final class MarcStore(spark: SparkSession, basePath: String, numBuckets: Int = 6
   private def cascadeToAttachedDistributed(changes: DataFrame,
       user: String, now: java.sql.Timestamp): Unit = {
     val attached = attachedBibsJoined(changes).localCheckpoint(false)
-    appendLog("auth_linked_update_log",
+    appendLog(authLinkedUpdateLogTable,
       attached.select(col("_id").as("record_id"),
           explode(AuthOps.subfieldXrefs).as("triggered_by"))
         .join(changes.select(col("xref").as("triggered_by")), "triggered_by")
@@ -671,23 +496,27 @@ final class MarcStore(spark: SparkSession, basePath: String, numBuckets: Int = 6
     * `auth_linked_update_log` collections (dlx/marc/__init__.py:
     * 2148-2149, 1205). Plain parquet appends: no swap, O(rows
     * appended) per write, and the readers below union all appends. */
-  private def appendLog(name: String, rows: DataFrame): Unit = {
+  private def appendLog(log: BucketTable, rows: DataFrame): Unit = {
     // coalesce bounds files-per-append without forcing a single-task
     // funnel: the two-row merge stamp stays one file, a bulk cascade
     // append (O(attached records)) still writes in parallel
-    rows.coalesce(8).write.mode(SaveMode.Append).parquet(s"$basePath/$name")
-    invalidate(s"$basePath/$name")
+    rows.coalesce(8).write.mode(SaveMode.Append).parquet(log.path)
+    log.invalidate()
   }
 
-  def mergeLog: DataFrame = cachedPlan(s"$basePath/merge_log") {
-    Seq.empty[(String, Long, String, java.sql.Timestamp, String)]
-      .toDF("record_type", "record_id", "action", "time", "user")
+  private def mergeLogTable = table("merge_log") { path =>
+    new BucketTable(spark, path, Seq.empty[(String, Long, String, java.sql.Timestamp, String)]
+      .toDF("record_type", "record_id", "action", "time", "user"))
   }
 
-  def authLinkedUpdateLog: DataFrame = cachedPlan(s"$basePath/auth_linked_update_log") {
-    Seq.empty[(String, Long, String, Long, java.sql.Timestamp)]
-      .toDF("record_type", "record_id", "action", "triggered_by", "time")
+  private def authLinkedUpdateLogTable = table("auth_linked_update_log") { path =>
+    new BucketTable(spark, path, Seq.empty[(String, Long, String, Long, java.sql.Timestamp)]
+      .toDF("record_type", "record_id", "action", "triggered_by", "time"))
   }
+
+  def mergeLog: DataFrame = mergeLogTable.read
+
+  def authLinkedUpdateLog: DataFrame = authLinkedUpdateLogTable.read
 
   /** Auth.merge (dlx/marc/__init__.py:2143-2233): stamp the losing/
     * gaining pair into merge_log, rewrite losing -> gaining xrefs
@@ -712,7 +541,7 @@ final class MarcStore(spark: SparkSession, basePath: String, numBuckets: Int = 6
     // the lock spans the whole stamp -> rewrite -> delete sequence
     // (re-entrant for the inner commits), so a concurrent writer can
     // never observe a half-merged store
-    appendLog("merge_log",
+    appendLog(mergeLogTable,
       Seq(("auth", losing, "losing"), ("auth", gaining, "gaining"))
         .toDF("record_type", "record_id", "action")
         .withColumn("time", lit(now)).withColumn("user", lit(user)))
@@ -788,14 +617,13 @@ final class MarcStore(spark: SparkSession, basePath: String, numBuckets: Int = 6
         .count()
       require(inUse == 0, s"Auth record(s) in use: cannot delete")
     }
-    val path = tablePath(recordType)
     // bounded by numBuckets (64), never by match count
     val buckets = read(recordType).toDF().where(predicate)
-      .select(pmod(col("_id"), lit(numBuckets.toLong)).as("b"))
+      .select(bucketOf.as("b"))
       .distinct().collect().map(_.getLong(0)).toSeq
     // stamp the deletion time on the history marker (reference records
     // deleted.user/time, dlx/marc/__init__.py:1288-1308). The marker
-    // frame reads the live bucket files; swapBuckets stages it (one
+    // frame reads the live bucket files; the swap stages it (one
     // read, strictly before any rename) and promotes it under the same
     // journal as the bucket swap — the 'deleted' version row and the
     // live-row removal are all-or-nothing.
@@ -810,10 +638,9 @@ final class MarcStore(spark: SparkSession, basePath: String, numBuckets: Int = 6
     val survivors = readRaw(recordType)
       .where(col("id_bucket").isin(buckets: _*) && !coalesce(predicate, lit(false)))
     // a bucket whose rows were all deleted has no staging dir and
-    // swapBuckets removes it outright
-    swapBuckets(path, survivors, buckets,
-      history = Some((versionedHistory(deleted, recordType, "deleted", now),
-        historyPath(recordType))))
+    // the swap removes it outright
+    live(recordType).swap(survivors, buckets,
+      Some(versionedHistory(deleted, recordType, "deleted", now)))
   }
 
   /** Recreate the last history version of a deleted record
@@ -898,7 +725,7 @@ final class MarcStore(spark: SparkSession, basePath: String, numBuckets: Int = 6
   /** One row per version, APPENDED — never a table rewrite. The
     * version number is prior-count + 1, computed from a read-only
     * aggregate restricted (semi-join) to the batch's ids. The frame is
-    * consumed by [[swapBuckets]], which stages it next to the bucket
+    * consumed by [[BucketTable.swap]], which stages it next to the bucket
     * staging and promotes the files under the same commit journal —
     * live rows and their version rows are all-or-nothing. */
   private def versionedHistory(batch: DataFrame, recordType: String,
@@ -914,30 +741,6 @@ final class MarcStore(spark: SparkSession, basePath: String, numBuckets: Int = 6
       .withColumn("action", lit(action))
       .drop("h_id", "prev_versions")
   }
-}
-
-object MarcStore {
-  private def generation(path: String): Long = TableGenerations.generation(path)
-  private def bumpGeneration(path: String): Unit = TableGenerations.bump(path)
-
-  /** Fault injection for the swap protocol (StoreStress crash mode +
-    * the q199 recovery gate): the next swap throws CrashInjected at
-    * the named point — "post_staging", "post_journal", "mid_rename"
-    * (after the first bucket rename), "post_rename". One-shot. */
-  @volatile var failpoint: Option[String] = None
-  final class CrashInjected(point: String)
-    extends RuntimeException(s"injected crash at $point")
-
-  /** One shared daemon thread for the concurrent history-staging
-    * write (a commit runs at most one; the pool exists so Spark jobs
-    * submitted from it don't inherit the caller's thread state). */
-  private[store] val stagingEc: scala.concurrent.ExecutionContext =
-    scala.concurrent.ExecutionContext.fromExecutor(
-      java.util.concurrent.Executors.newCachedThreadPool(r => {
-        val t = new Thread(r, "marcstore-history-staging")
-        t.setDaemon(true)
-        t
-      }))
 }
 
 /** Cross-writer exclusion for one store path. The staging-dir swap
@@ -1022,30 +825,4 @@ object StoreLock {
       }
     } finally jvm.unlock()
   }
-}
-
-/** JVM-wide table write generations: lets every store instance (tests
-  * and CLIs routinely open a second store on the same path) observe
-  * any instance's writes and drop its cached read plan. Shared by
-  * MarcStore and FileStore. */
-object TableGenerations {
-  private val generations = new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
-
-  /** Two spellings of one local directory (relative vs absolute,
-    * trailing slash, symlink) must share a generation counter, so
-    * scheme-less paths are canonicalized; URI paths (hdfs://, s3a://)
-    * are already absolute and pass through untouched. */
-  private def keyOf(path: String): String =
-    if (path.contains("://")) path
-    else try new java.io.File(path).getCanonicalPath
-    catch { case _: java.io.IOException => new java.io.File(path).getAbsolutePath }
-
-  def generation(path: String): Long = {
-    val g = generations.get(keyOf(path))
-    if (g == null) 0L else g.longValue
-  }
-
-  def bump(path: String): Unit =
-    generations.merge(keyOf(path), java.lang.Long.valueOf(1L),
-      (a, b) => java.lang.Long.valueOf(a.longValue + b.longValue))
 }

@@ -221,20 +221,4 @@ object Streaming {
           }
       }
   }
-
-  /** Gap sessionization with custom state (flatMapGroupsWithState
-    * analog shaped as a plain API for tests): batch fallback uses the
-    * window form in TextOps.q20Sessionize. */
-  def sessionCounts(events: DataFrame, gapSeconds: Long = 1800): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val byUser = Window.partitionBy("user_id").orderBy("ts_s", "event_id")
-    events
-      .withColumn("ts_s", col("ts").cast("long"))
-      .withColumn("prev_s", lag(col("ts_s"), 1).over(byUser))
-      .withColumn("new_session",
-        when(col("prev_s").isNull || col("ts_s") - col("prev_s") > gapSeconds, 1L).otherwise(0L))
-      .withColumn("session_no", sum(col("new_session")).over(byUser))
-      .groupBy("user_id", "session_no")
-      .agg(count(lit(1)).as("n_events"))
-  }
 }

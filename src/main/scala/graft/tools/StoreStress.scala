@@ -125,12 +125,12 @@ object StoreStress {
     val points = Seq("post_staging", "post_journal", "mid_rename", "post_rename",
       "post_history")
     for ((p, i) <- points.zipWithIndex) {
-      graft.store.MarcStore.failpoint = Some(p)
+      graft.store.BucketTable.failpoint = Some(p)
       val t0 = System.nanoTime()
       val crashed =
         try { store.commit(bibs.map(_.copy(basket = s"v$i")), user = s"u_$p",
           authCheck = false); false } // no auth dim in this scratch store
-        catch { case _: graft.store.MarcStore.CrashInjected => true }
+        catch { case _: graft.store.BucketTable.CrashInjected => true }
       require(crashed, s"failpoint $p did not fire")
       store = new graft.store.MarcStore(spark, base) // reopen = recovery sweep
       val users = store.read("bib").toDF().select("user").distinct()
@@ -405,9 +405,9 @@ object StoreStress {
     mode.split(":", 2) match {
       case Array("crash", point) =>
         commitN(0)
-        graft.store.MarcStore.failpoint = Some(point)
+        graft.store.BucketTable.failpoint = Some(point)
         try { commitN(1); sys.error(s"failpoint $point did not fire") }
-        catch { case _: graft.store.MarcStore.CrashInjected =>
+        catch { case _: graft.store.BucketTable.CrashInjected =>
           println(s"[worker $w] crashed at $point as injected") }
         java.nio.file.Files.write(
           java.nio.file.Paths.get(base, s".crashed_$w"), Array.empty[Byte])

@@ -163,12 +163,33 @@ class FileStoreSpec extends AnyFunSuite {
     assert(back.updated != null)
   }
 
+  test("an upsert crashed at a swap failpoint recovers all-or-nothing on reopen") {
+    val dir = java.nio.file.Files.createTempDirectory("filestore_failpoint").toString
+    def open() = new FileStore(spark, dir, new LocalBlobStore(s"$dir/blobs"))
+    def ids(store: FileStore) = store.read().select("_id").collect().map(_.getString(0)).toSet
+    var store = open()
+    store.importBinary(testData, Seq(Identifier("isbn", "0")), Seq("EN"), "m", "s")
+    // a pre-journal crash rolls back to the old row set; a crash at or
+    // after the journal rolls forward to the new one
+    for ((point, forward) <- Seq("post_staging" -> false, "post_journal" -> true,
+        "mid_rename" -> true)) {
+      val before = ids(store)
+      val data = s"data at $point".getBytes("UTF-8")
+      graft.store.BucketTable.failpoint = Some(point)
+      intercept[graft.store.BucketTable.CrashInjected] {
+        store.importBinary(data, Seq(Identifier("isbn", point)), Seq("EN"), "m", "s")
+      }
+      store = open()
+      val expected = if (forward) before + store.md5Hex(data) else before
+      assert(ids(store) === expected, s"$point must recover to the ${if (forward) "new" else "old"} rows")
+      assert(!new java.io.File(s"$dir/files_staging").exists(), s"$point left staging behind")
+    }
+  }
+
   test("upsert staging recovers via the commit journal (round 11)") {
-    // the file table's stage-and-swap now journals like MarcStore:
     // journal present -> roll forward (finish renames), absent or
-    // malformed -> roll back. Crash states are hand-crafted here
-    // (FileStore has no failpoints); direction-exactness at volume is
-    // MarcStore's q199/StoreCrashSpec, whose protocol this mirrors.
+    // malformed -> roll back. Both states are hand-crafted here: the
+    // failpoints cannot leave a malformed journal behind.
     val dir = java.nio.file.Files.createTempDirectory("filestore_crash").toString
     var store = new FileStore(spark, dir, new LocalBlobStore(s"$dir/blobs"))
     store.importBinary(testData, Seq(Identifier("isbn", "1")), Seq("EN"),

@@ -489,6 +489,26 @@ class SparkMarcSpec extends AnyFunSuite {
     assert(store.read("auth").collect().toSet == authsBefore)
   }
 
+  test("commit refuses a batch that repeats an _id; new records are not repeats") {
+    val dir = java.nio.file.Files.createTempDirectory("marcstore_dup").toString
+    val store = new graft.store.MarcStore(spark, dir, numBuckets = 4)
+    def bib(id: Long, title: String) = MarcRecord(recordType = "bib", id = Some(id)).set("245", "a", title)
+    store.commit(MarcSchema.toDataset(spark, Seq(bib(5L, "v1"))), user = "t")
+    val liveBefore = store.read("bib").collect().toSet
+    val historyBefore = store.readHistory("bib").collect().toSet
+    val repeated = MarcSchema.toDataset(spark, Seq(bib(5L, "v2"), bib(5L, "v3")))
+    val e = intercept[IllegalArgumentException] {
+      store.commit(repeated, user = "t")
+    }
+    assert(e.getMessage.contains("repeats"))
+    assert(store.read("bib").collect().toSet == liveBefore)
+    assert(store.readHistory("bib").collect().toSet == historyBefore)
+    // two new records (_id -1) in one batch get two fresh ids
+    val fresh = Seq("n1", "n2").map(t => MarcRecord(recordType = "bib").set("245", "a", t))
+    store.commit(MarcSchema.toDataset(spark, fresh), user = "t")
+    assert(store.read("bib").select("_id").distinct().count() == 3)
+  }
+
   test("history queries: from_query, find_deleted, deleted_by_date (test_marc.py:1122-1146)") {
     val dir = java.nio.file.Files.createTempDirectory("marcstore3").toString
     val store = new graft.store.MarcStore(spark, dir)

@@ -3,11 +3,11 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.spark._
-import graft.store.MarcStore
+import graft.store.{BucketTable, MarcStore}
 import Fixtures._
 
 /** Crash-point recovery of the stage-and-swap commit protocol
-  * (MarcStore.swapBuckets / recoverStaging): direction-exact — a crash
+  * (BucketTable.swap / recover): direction-exact — a crash
   * BEFORE the journal must roll back (old state), a crash at or after
   * the journal must roll forward (new state). The q199 gate asserts
   * all-or-nothing at volume; this pins WHICH side each window lands
@@ -39,8 +39,8 @@ class StoreCrashSpec extends AnyFunSuite {
 
     // journal not yet written -> recovery must ROLL BACK to v1, and the
     // staged history rows must roll back WITH the buckets
-    MarcStore.failpoint = Some("post_staging")
-    intercept[MarcStore.CrashInjected] {
+    BucketTable.failpoint = Some("post_staging")
+    intercept[BucketTable.CrashInjected] {
       store.commit(bibs("v2"), user = "u", authCheck = false)
     }
     store = new MarcStore(spark, base, numBuckets = 4)
@@ -55,8 +55,8 @@ class StoreCrashSpec extends AnyFunSuite {
     // live swapped, history not yet appended)
     for (((p, marker), k) <- Seq("post_journal" -> "v2", "mid_rename" -> "v3",
         "post_rename" -> "v4", "post_history" -> "v5").zipWithIndex) {
-      MarcStore.failpoint = Some(p)
-      intercept[MarcStore.CrashInjected] {
+      BucketTable.failpoint = Some(p)
+      intercept[BucketTable.CrashInjected] {
         store.commit(bibs(marker), user = "u", authCheck = false)
       }
       store = new MarcStore(spark, base, numBuckets = 4)
@@ -79,8 +79,8 @@ class StoreCrashSpec extends AnyFunSuite {
     // rethrew — a permanently bricked store
     val base = freshBase()
     var store = new MarcStore(spark, base, numBuckets = 4)
-    MarcStore.failpoint = Some("post_journal")
-    intercept[MarcStore.CrashInjected] {
+    BucketTable.failpoint = Some("post_journal")
+    intercept[BucketTable.CrashInjected] {
       store.commit(bibs("v1"), user = "u", authCheck = false)
     }
     assert(!new java.io.File(s"$base/bibs").exists(), "precondition: no live dir yet")
@@ -90,7 +90,7 @@ class StoreCrashSpec extends AnyFunSuite {
   }
 
   test("a SAME-INSTANCE retry after a crashed swap sees the recovered state") {
-    // r11 review: recovery used to run only inside swapBuckets — after
+    // r11 review: recovery used to run only inside the swap — after
     // the retry's read plans (survivors, history version counts) were
     // already built against the pre-recovery listing, so a retry could
     // duplicate version numbers and revert the recovered commit's
@@ -98,8 +98,8 @@ class StoreCrashSpec extends AnyFunSuite {
     val base = freshBase()
     val store = new MarcStore(spark, base, numBuckets = 4)
     store.commit(bibs("v1"), user = "u", authCheck = false)
-    MarcStore.failpoint = Some("post_journal")
-    intercept[MarcStore.CrashInjected] {
+    BucketTable.failpoint = Some("post_journal")
+    intercept[BucketTable.CrashInjected] {
       store.commit(bibs("v2"), user = "u", authCheck = false)
     }
     // no reopen: the next write on the SAME instance must roll v2
@@ -124,8 +124,8 @@ class StoreCrashSpec extends AnyFunSuite {
     // swapped but the history marker is not yet promoted; recovery
     // must finish the promotion, so bib 1 is gone AND its 'deleted'
     // version row is present (the marker stages under the same journal)
-    MarcStore.failpoint = Some("post_rename")
-    intercept[MarcStore.CrashInjected] {
+    BucketTable.failpoint = Some("post_rename")
+    intercept[BucketTable.CrashInjected] {
       store.delete("bib", Seq(1L), user = "deleter")
     }
     store = new MarcStore(spark, base, numBuckets = 4)
@@ -135,8 +135,8 @@ class StoreCrashSpec extends AnyFunSuite {
     assert(hist.where(col("action") === "deleted" && col("_id") === 1L).count() === 1)
 
     // pre-journal crash: roll BACK — bib 2 still live, NO marker row
-    MarcStore.failpoint = Some("post_staging")
-    intercept[MarcStore.CrashInjected] {
+    BucketTable.failpoint = Some("post_staging")
+    intercept[BucketTable.CrashInjected] {
       store.delete("bib", Seq(2L), user = "deleter")
     }
     store = new MarcStore(spark, base, numBuckets = 4)
@@ -176,8 +176,8 @@ class StoreCrashSpec extends AnyFunSuite {
     val base = freshBase()
     var store = new MarcStore(spark, base, numBuckets = 4)
     store.commit(bibs("v1"), user = "u", authCheck = false)
-    MarcStore.failpoint = Some("mid_rename")
-    intercept[MarcStore.CrashInjected] {
+    BucketTable.failpoint = Some("mid_rename")
+    intercept[BucketTable.CrashInjected] {
       store.commit(bibs("v2"), user = "u", authCheck = false)
     }
     // two successive reopens: the second sees no staging and changes nothing
