@@ -79,40 +79,52 @@ object Serialization {
         // the body: first digit-prefixed $0 wins (see ZeroXref)
         val xref: Option[Long] = ZeroXref.mrk(
           chunks.toSeq.collect { case c if c.startsWith("0") => c.substring(1) })
-        var subs = Vector.empty[Subfield]
-        var ambiguous = Vector.empty[(String, String)]
-        for (chunk <- chunks) {
-          val code = chunk.substring(0, 1)
-          val value = chunk.substring(1)
-          if (authControl && DlxConfig.isAuthorityControlled(recordType, tag, code)) {
-            xref match {
-              case Some(x) => subs :+= Subfield(code, None, Some(x))
-              case None =>
-                val xrefs = auth.xlookup(
-                  DlxConfig.authoritySourceTag(recordType, tag, code).getOrElse(tag), code, value)
-                xrefs match {
-                  case Seq(x) => subs :+= Subfield(code, None, Some(x))
-                  case Seq() => throw new InvalidAuthValue(recordType, tag, code, value)
-                  case _ => ambiguous :+= (code -> value)
-                }
-            }
-          } else subs :+= Subfield(code, Some(value))
-        }
-        // multi-subfield disambiguation before giving up (reference
-        // from_mrk, dlx/marc/__init__.py:1695-1700)
-        if (ambiguous.nonEmpty) {
-          auth.resolveAmbiguous(recordType, tag, ambiguous) match {
-            case Some(x) => ambiguous.foreach { case (c, _) => subs :+= Subfield(c, None, Some(x)) }
-            case None =>
-              val (c, v) = ambiguous.head
-              throw new AmbiguousAuthValue(recordType, tag, c, v)
-          }
-        }
-        if (deleteSubfieldZero) subs = subs.filterNot(_.code == "0")
+        val subs = controlSubfields(recordType, tag, xref,
+          chunks.toSeq.map(c => (c.substring(0, 1), c.substring(1))), authControl, deleteSubfieldZero)
         rec = rec.copy(fields = rec.fields :+ DataField(tag, ind1, ind2, subs))
       }
     }
     rec
+  }
+
+  /** A parsed datafield's subfields under parse-time auth control,
+    * shared by MRK and MARCXML (reference from_mrk, dlx/marc/__init__.py:
+    * 1676-1700, and from_xml_raw, 1723-1785): a controlled code links
+    * to the field's captured `$0` xref, else to the single auth its
+    * value looks up; values with several matches are linked together
+    * by the exact-heading rule after the loop, or raise. `$0` itself is
+    * dropped when `deleteSubfieldZero`. */
+  private def controlSubfields(recordType: String, tag: String, xref: Option[Long],
+      pairs: Seq[(String, String)], authControl: Boolean, deleteSubfieldZero: Boolean)
+      (implicit auth: AuthLookup): Vector[Subfield] = {
+    var subs = Vector.empty[Subfield]
+    var ambiguous = Vector.empty[(String, String)]
+    for ((code, value) <- pairs) {
+      if (authControl && DlxConfig.isAuthorityControlled(recordType, tag, code)) {
+        xref match {
+          case Some(x) => subs :+= Subfield(code, None, Some(x))
+          case None =>
+            val xrefs = auth.xlookup(
+              DlxConfig.authoritySourceTag(recordType, tag, code).getOrElse(tag), code, value)
+            xrefs match {
+              case Seq(x) => subs :+= Subfield(code, None, Some(x))
+              case Seq() => throw new InvalidAuthValue(recordType, tag, code, value)
+              case _ => ambiguous :+= (code -> value)
+            }
+        }
+      } else subs :+= Subfield(code, Some(value))
+    }
+    // multi-subfield disambiguation before giving up (reference
+    // from_mrk, dlx/marc/__init__.py:1695-1700)
+    if (ambiguous.nonEmpty) {
+      auth.resolveAmbiguous(recordType, tag, ambiguous) match {
+        case Some(x) => ambiguous.foreach { case (c, _) => subs :+= Subfield(c, None, Some(x)) }
+        case None =>
+          val (c, v) = ambiguous.head
+          throw new AmbiguousAuthValue(recordType, tag, c, v)
+      }
+    }
+    if (deleteSubfieldZero) subs.filterNot(_.code == "0") else subs
   }
 
   /** Records split on blank lines (MarcSet.from_mrk,
@@ -275,34 +287,8 @@ object Serialization {
       // $0 wins (divergences documented at ZeroXref)
       val xref: Option[Long] = ZeroXref.xml(
         subNodes.filter(n => (n \ "@code").text == "0").map(_.text))
-      var subs = Vector.empty[Subfield]
-      var ambiguous = Vector.empty[(String, String)]
-      for (sn <- subNodes) {
-        val code = (sn \ "@code").text
-        val value = sn.text
-        if (authControl && DlxConfig.isAuthorityControlled(recordType, tag, code)) {
-          xref match {
-            case Some(x) => subs :+= Subfield(code, None, Some(x))
-            case None =>
-              val xrefs = auth.xlookup(
-                DlxConfig.authoritySourceTag(recordType, tag, code).getOrElse(tag), code, value)
-              xrefs match {
-                case Seq(x) => subs :+= Subfield(code, None, Some(x))
-                case Seq() => throw new InvalidAuthValue(recordType, tag, code, value)
-                case _ => ambiguous :+= (code -> value)
-              }
-          }
-        } else subs :+= Subfield(code, Some(value))
-      }
-      if (ambiguous.nonEmpty) {
-        auth.resolveAmbiguous(recordType, tag, ambiguous) match {
-          case Some(x) => ambiguous.foreach { case (c, _) => subs :+= Subfield(c, None, Some(x)) }
-          case None =>
-            val (c, v) = ambiguous.head
-            throw new AmbiguousAuthValue(recordType, tag, c, v)
-        }
-      }
-      if (deleteSubfieldZero) subs = subs.filterNot(_.code == "0")
+      val subs = controlSubfields(recordType, tag, xref,
+        subNodes.map(sn => ((sn \ "@code").text, sn.text)), authControl, deleteSubfieldZero)
       rec = rec.copy(fields = rec.fields :+ DataField(tag,
         (fieldNode \ "@ind1").text, (fieldNode \ "@ind2").text, subs))
     }

@@ -7,6 +7,7 @@ import graft.query.CondVal._
 import graft.text.Tokenizer
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import java.util.regex.Pattern
 
 /** Compiles the query AST to Catalyst Column predicates over the
   * canonical MarcRow schema.
@@ -29,11 +30,11 @@ import org.apache.spark.sql.functions._
   *    Past the cap the behavior mirrors the reference exactly: REGEX
   *    conditions degrade to a direct regex predicate over the record's
   *    own values (query.py:194-206 falls back to a raw Condition);
-  *    TEXT conditions RAISE InvalidQueryString ("too many hits ...
-  *    Try narrowing the search", query.py:313-318, 452-458). The
-  *    semi-join path above is the deliberate divergence: a top-level
-  *    positive text search never resolves an in-list at all, so it
-  *    has no cap to exceed.
+  *    TEXT conditions, fielded and logical, RAISE InvalidQueryString
+  *    ("too many hits ... Try narrowing the search", query.py:313-318
+  *    fielded, 452-458 logical). The semi-join path above is the
+  *    deliberate divergence: a top-level positive text search never
+  *    resolves an in-list at all, so it has no cap to exceed.
   *  - Resolved auth XREF lists (the reference collects these uncapped,
   *    query.py:340-358) are capped at `maxResolvedXrefs`; past the cap
   *    the matching heading slice stays a DataFrame and the predicate
@@ -137,13 +138,12 @@ final class SparkQueryCompiler(spark: SparkSession, bibs: DataFrame, auths: Data
     }
 
     for (cond <- joinable) {
-      val (tag, code, matchedValues: DataFrame) = cond match {
-        case TagRegex(t, c, rx, _, _) =>
-          (t, c, tagRegexValues(t, c, rx).select(normalizeCol(col("v")).as("mnorm")))
-        case TagText(t, c, tq, _, _) =>
-          (t, c, tagTextValues(t, c, tq).select(normalizeCol(col("v")).as("mnorm")))
+      val (tag, code, values) = cond match {
+        case TagRegex(t, c, rx, _, _) => (t, c, tagRegexValues(t, c, rx))
+        case TagText(t, c, tq, _, _) => (t, c, tagTextValues(t, c, tq))
         case other => throw new IllegalStateException(other.toString)
       }
+      val matchedValues = values.select(normalizeCol(col("v")).as("mnorm"))
       // this record type's subfields of the tag, one row per (_id,
       // subfield). Every step is a semi join, so repeats on either side
       // never multiply rows and no step needs a distinct (a shuffle).
@@ -155,15 +155,14 @@ final class SparkQueryCompiler(spark: SparkSession, bibs: DataFrame, auths: Data
         .join(matchedValues, normalizeCol(col("s.value")) === col("mnorm"), "left_semi")
         .select("rid")
       // auth xref OR branch: heading values in the matched set
-      val xrefHits =
-        if (DlxConfig.authorityControlled(rt).contains(tag) &&
-            code.forall(c => DlxConfig.isAuthorityControlled(rt, tag, c))) {
-          val src = DlxConfig.authorityControlled(rt)(tag).values.head
+      val xrefHits = controlledSourceTag(rt, tag, code) match {
+        case Some(src) =>
           val xrefDf = headings.where(col("tag") === src)
             .join(matchedValues, col("norm_value") === col("mnorm"), "left_semi")
             .select(col("xref").as("mxref"))
           subs.join(xrefDf, col("s.xref") === col("mxref"), "left_semi").select("rid")
-        } else df.sparkSession.emptyDataFrame.withColumn("rid", lit(0L)).limit(0).select("rid")
+        case None => df.sparkSession.emptyDataFrame.withColumn("rid", lit(0L)).limit(0).select("rid")
+      }
       val hits = valueHits.union(xrefHits)
       df = df.join(hits, df("_id") === hits("rid"), "left_semi")
     }
@@ -240,13 +239,12 @@ final class SparkQueryCompiler(spark: SparkSession, bibs: DataFrame, auths: Data
     }
     out.where(pred).drop(p.flags.map(_.name).toSeq: _*)
   }
-
   // ---- resolution against the derived DataFrames. Collected VALUE
   // in-lists are capped at the reference's limit (dlx/marc/query.py:
   // 194-199: 1 MB serialized); past the cap, regex conditions fall
   // back to a direct predicate over the record (query.py:194-206) and
-  // text conditions raise (query.py:313-318) — the reference's exact
-  // split. Resolved XREF lists (uncapped driver lists in the
+  // text conditions raise (query.py:313-318, 452-458) — the reference's
+  // exact split. Resolved XREF lists (uncapped driver lists in the
   // reference) are capped at maxResolvedXrefs (131,072 longs = the
   // same 1 MB discipline); past the cap the branch becomes a pending
   // flag join instead of an INSET.
@@ -257,6 +255,7 @@ final class SparkQueryCompiler(spark: SparkSession, bibs: DataFrame, auths: Data
   private sealed trait XrefSet { def nonEmpty: Boolean }
   private case class XrefList(xrefs: Seq[Long]) extends XrefSet { def nonEmpty = xrefs.nonEmpty }
   private case class XrefFrame(hits: DataFrame) extends XrefSet { def nonEmpty = true }
+  private val noXrefs: XrefSet = XrefList(Nil)
 
   /** One pending flag join: records whose `tag` field carries a
     * subfield (optionally code-scoped) with an xref in `hits`.
@@ -302,10 +301,60 @@ final class SparkQueryCompiler(spark: SparkSession, bibs: DataFrame, auths: Data
 
   private def normalize(s: String): String = Collation.normalize(s)
 
-  private def rxFilter(rx: Rx): Column = {
-    val pattern = if (rx.ci) "(?i)" + rx.pattern else rx.pattern
-    col("v").rlike(pattern)
+  // ---- the match rules, each written once
+
+  /** The one regex rule: every pattern the compiler matches, parsed or
+    * built (phrases, wildcards), goes through here; a case-insensitive
+    * Rx carries the inline flag. */
+  private def regexMatch(c: Column, rx: Rx): Column =
+    c.rlike(if (rx.ci) "(?i)" + rx.pattern else rx.pattern)
+
+  /** `c` (already normalized) is one of the normalized `values`. */
+  private def normIn(c: Column, values: Seq[String]): Column = c.isin(values.map(normalize): _*)
+
+  /** The match of a CondVal on a string column: collated equality for
+    * Exact and TextMode, the regex for Rx, anything for Star. */
+  private def valueMatch(c: Column, cv: CondVal): Column = cv match {
+    case Exact(v) => normalizeCol(c) === normalize(v)
+    case TextMode(v) => normalizeCol(c) === normalize(v)
+    case rx: Rx => regexMatch(c, rx)
+    case Star => lit(true)
   }
+
+  /** The same match on a heading-dimension row (None: Star resolves no
+    * heading). */
+  private def headingMatch(cv: CondVal): Option[Column] = cv match {
+    case Exact(v) => Some(col("norm_value") === normalize(v))
+    case TextMode(v) => Some(col("norm_value") === normalize(v))
+    case rx: Rx => Some(regexMatch(col("value"), rx))
+    case Star => None
+  }
+
+  /** The one heading-slice lookup: the ids of auths whose `src`
+    * heading subfield (of `code`, if given) passes `test`. */
+  private def headingXrefs(src: String, code: Option[String], test: Column): XrefSet = {
+    val scope = code.fold(col("tag") === src)(c => col("tag") === src && col("code") === c)
+    resolveXrefSet(headings.where(scope && test))
+  }
+
+  /** First configured source tag of an authority-controlled tag, if
+    * the code scope stays within authority control. */
+  private def controlledSourceTag(rt: String, tag: String, code: Option[String]): Option[String] =
+    DlxConfig.authorityControlled(rt).get(tag).filter(m => code.forall(m.contains)).map(_.values.head)
+
+  /** A fielded text query's filters over an index frame, one `where`
+    * each: every stemmed term in `words`, no negated term, every
+    * phrase between word boundaries in `text`. */
+  private def textFiltered(entries: DataFrame, tq: TextQuery, text: Column): DataFrame = {
+    val words = col("words")
+    val filters = Tokenizer.tokenize(tq.terms).map(t => array_contains(words, t)) ++
+      Tokenizer.tokenize(tq.negated.mkString(" ")).map(t => !array_contains(words, t)) ++
+      tq.phrases.map(p => regexMatch(text, Rx("\\b" + Pattern.quote(p) + "\\b")))
+    filters.foldLeft(entries)(_ where _)
+  }
+
+  private def tooManyHits(tq: TextQuery, field: String) = new InvalidQueryString(
+    s"""Text search "${tq.terms}" has too many hits on field "$field". Try narrowing the search""")
 
   /** The tag's subfield values (col "v") matching a regex, one row per
     * matching posting subfield: repeats are kept for the semi joins of
@@ -315,69 +364,35 @@ final class SparkQueryCompiler(spark: SparkSession, bibs: DataFrame, auths: Data
       .select(explode(col("subfields")).as("s"))
       .select(col("s.code").as("c"), col("s.value").as("v"))
     code.map(c => subs.where(col("c") === c)).getOrElse(subs)
-      .where(col("v").isNotNull && rxFilter(rx))
+      .where(col("v").isNotNull && regexMatch(col("v"), rx))
       .select("v")
   }
 
   /** The tag's subfield values (col "v") matching a fielded text query,
     * one row per matching posting subfield, repeats kept. */
   private def tagTextValues(tag: String, code: Option[String], tq: TextQuery): DataFrame = {
-    val terms = Tokenizer.tokenize(tq.terms)
-    val negated = Tokenizer.tokenize(tq.negated.mkString(" "))
-    var entries = tagEntriesFor(tag)
-    terms.foreach(t => entries = entries.where(array_contains(col("words"), t)))
-    negated.foreach(t => entries = entries.where(!array_contains(col("words"), t)))
     // the phrase form of the field text is derived, not stored
-    val text = fieldPaddedText(fieldTextCol(col("subfields")))
-    tq.phrases.foreach { p =>
-      entries = entries.where(text.rlike("\\b" + java.util.regex.Pattern.quote(p) + "\\b"))
-    }
+    val entries = textFiltered(tagEntriesFor(tag), tq, fieldPaddedText(fieldTextCol(col("subfields"))))
     val values = entries.select(explode(col("subfields")).as("s"))
       .select(col("s.code").as("c"), col("s.value").as("v"))
     val scoped = code.map(c => values.where(col("c") === c)).getOrElse(values)
       .where(col("v").isNotNull && col("v") =!= "")
     // value-level term containment evaluated in the cluster (not on the
     // driver): each value must itself contain every stemmed term
-    terms.foldLeft(scoped)((d, w) => d.where(array_contains(tokenizeUdf(col("v")), w)))
+    Tokenizer.tokenize(tq.terms)
+      .foldLeft(scoped)((d, w) => d.where(array_contains(tokenizeUdf(col("v")), w)))
       .select("v")
   }
 
   /** subfield values matched by a regex in the tag index (capped;
     * None = beyond the reference's in-list limit). */
-  def resolveTagRegex(tag: String, code: Option[String], rx: Rx): Option[Seq[String]] =
+  private def resolveTagRegex(tag: String, code: Option[String], rx: Rx): Option[Seq[String]] =
     collectCapped(tagRegexValues(tag, code, rx).distinct())
 
   /** subfield values matched by field-level text search + value-level
     * term containment (capped). */
-  def resolveTagText(tag: String, code: Option[String], tq: TextQuery): Option[Seq[String]] =
+  private def resolveTagText(tag: String, code: Option[String], tq: TextQuery): Option[Seq[String]] =
     collectCapped(tagTextValues(tag, code, tq).distinct())
-
-  /** auth ids whose source-tag heading subfield (code-scoped) matches. */
-  private def authXrefs(rt: String, tag: String, code: String, value: Either[String, Rx]): XrefSet = {
-    DlxConfig.authoritySourceTag(rt, tag, code) match {
-      case None => XrefList(Nil)
-      case Some(src) =>
-        val base = headings.where(col("tag") === src && col("code") === code)
-        val hit = value match {
-          case Left(s) => base.where(col("norm_value") === normalize(s))
-          case Right(rx) => base.where({
-            val pattern = if (rx.ci) "(?i)" + rx.pattern else rx.pattern
-            col("value").rlike(pattern)
-          })
-        }
-        resolveXrefSet(hit)
-    }
-  }
-
-  /** auth ids whose FIRST source tag of `tag` has any subfield value in
-    * the set (TagOnly/TagText resolution, dlx/marc/query.py:210-228). */
-  private def xrefsForValues(rt: String, tag: String, values: Seq[String]): XrefSet =
-    DlxConfig.authorityControlled(rt).get(tag).map(_.values.head) match {
-      case None => XrefList(Nil)
-      case Some(src) =>
-        resolveXrefSet(headings.where(col("tag") === src &&
-          col("norm_value").isin(values.map(normalize): _*)))
-    }
 
   // ---- Column predicate builders over the canonical schema
 
@@ -401,20 +416,14 @@ final class SparkQueryCompiler(spark: SparkSession, bibs: DataFrame, auths: Data
   private def literalOnly(pred: Column => Column): Column => Column =
     s => s.getField("xref").isNull && pred(s)
 
-  private def normValueIn(values: Seq[String]): Column => Column =
-    literalOnly(s => normalizeCol(s.getField("value")).isin(values.map(normalize): _*))
+  private def subValue(cv: CondVal): Column => Column =
+    literalOnly(s => valueMatch(s.getField("value"), cv))
 
   private def xrefIn(xrefs: Seq[Long]): Column => Column =
     s => if (xrefs.isEmpty) lit(false) else s.getField("xref").isin(xrefs: _*)
 
-  def compileCond(cond: Cond, rt: String): Column = {
-    val p = new Pending
-    val c = compileCond(cond, rt, p)
-    if (p.flags.nonEmpty) throw new InvalidQueryString(
-      s"Condition resolves more than $maxResolvedXrefs auth xrefs; " +
-        "run it through run/filterFrame (distributed xref join) or narrow the search")
-    c
-  }
+  private def logicalValues(field: String): Column =
+    coalesce(col("logical").getItem(field), array())
 
   private def compileCond(cond: Cond, rt: String, pnd: Pending): Column = cond match {
     case AndCond(cs) => cs.map(compileCond(_, rt, pnd)).reduce(_ && _)
@@ -424,30 +433,15 @@ final class SparkQueryCompiler(spark: SparkSession, bibs: DataFrame, auths: Data
     case FieldCond(tag, subs, modifier, _) =>
       // Left = subfield-level predicate; Right = record-level flag
       // column (over-cap xref branch, code-scoped flag join)
-      def pairPred(code: String, cv: CondVal): Either[Column => Column, Column] = {
-        if (DlxConfig.isAuthorityControlled(rt, tag, code)) {
-          val xrefs = cv match {
-            case Exact(s) => authXrefs(rt, tag, code, Left(s))
-            case TextMode(s) => authXrefs(rt, tag, code, Left(s))
-            case rx: Rx => authXrefs(rt, tag, code, Right(rx))
-            case Star => XrefList(Nil)
-          }
-          xrefs match {
-            case XrefList(xs) => Left(s => s.getField("code") === code && xrefIn(xs)(s))
-            case XrefFrame(hits) => Right(pnd.flag(tag, Some(code), hits))
-          }
-        } else {
-          val valuePred: Column => Column = cv match {
-            case Exact(v) => s => normalizeCol(s.getField("value")) === normalize(v)
-            case TextMode(v) => s => normalizeCol(s.getField("value")) === normalize(v)
-            case rx: Rx =>
-              val pattern = if (rx.ci) "(?i)" + rx.pattern else rx.pattern
-              s => s.getField("value").rlike(pattern)
-            case Star => _ => lit(true)
-          }
-          Left(s => s.getField("code") === code && literalOnly(valuePred)(s))
+      def pairPred(code: String, cv: CondVal): Either[Column => Column, Column] =
+        DlxConfig.authoritySourceTag(rt, tag, code) match {
+          case Some(src) =>
+            headingMatch(cv).fold(noXrefs)(headingXrefs(src, Some(code), _)) match {
+              case XrefList(xs) => Left(s => s.getField("code") === code && xrefIn(xs)(s))
+              case XrefFrame(hits) => Right(pnd.flag(tag, Some(code), hits))
+            }
+          case None => Left(s => s.getField("code") === code && subValue(cv)(s))
         }
-      }
       lazy val preds = subs.map { case (c, v) => pairPred(c, v) }
       modifier match {
         case None =>
@@ -477,45 +471,24 @@ final class SparkQueryCompiler(spark: SparkSession, bibs: DataFrame, auths: Data
       }
 
     case TagValue(tag, cv, not, _) =>
-      val valuePred: Column => Column = cv match {
-        case Exact(v) => s => normalizeCol(s.getField("value")) === normalize(v)
-        case TextMode(v) => s => normalizeCol(s.getField("value")) === normalize(v)
-        case rx: Rx =>
-          val pattern = if (rx.ci) "(?i)" + rx.pattern else rx.pattern
-          s => s.getField("value").rlike(pattern)
-        case Star => _ => lit(true)
-      }
-      val xrefs: XrefSet = cv match {
-        case Exact(v) => xrefsForValues(rt, tag, Seq(v))
-        case TextMode(v) => xrefsForValues(rt, tag, Seq(v))
-        case rx: Rx =>
-          DlxConfig.authorityControlled(rt).get(tag).map(_.values.head) match {
-            case None => XrefList(Nil)
-            case Some(src) =>
-              val pattern = if (rx.ci) "(?i)" + rx.pattern else rx.pattern
-              resolveXrefSet(headings.where(col("tag") === src && col("value").rlike(pattern)))
-          }
-        case Star => XrefList(Nil)
-      }
-      val valueHit = existsField(tag, subMatch(None, literalOnly(valuePred)))
-      val xrefHit = xrefHitCol(tag, xrefs, pnd)
-      if (!not) (if (xrefs.nonEmpty) valueHit || xrefHit else valueHit)
-      else !valueHit && !xrefHit
+      tagPredicate(rt, tag, None, subValue(cv), headingMatch(cv), not, pnd)
 
     case TagRegex(tag, code, rx, not, _) =>
       resolveTagRegex(tag, code, rx) match {
         // reference quirk: zero matches = match-nothing, even under NOT
         case Some(matched) if matched.isEmpty => lit(false)
         case Some(matched) => inSetPredicate(rt, tag, code, matched, not, pnd)
-        case None => directRegexPredicate(rt, tag, code, rx, not, pnd)
+        // past the cap the reference falls back to a direct regex
+        // condition (dlx/marc/query.py:194-206): regex the record's own
+        // subfield values and the heading dimension
+        case None => tagPredicate(rt, tag, code, subValue(rx), headingMatch(rx), not, pnd)
       }
 
     case TagText(tag, code, tq, not, _) =>
       resolveTagText(tag, code, tq) match {
         case Some(matched) if matched.isEmpty => lit(false)
         case Some(matched) => inSetPredicate(rt, tag, code, matched, not, pnd)
-        case None => throw new InvalidQueryString(
-          s"""Text search "${tq.terms}" has too many hits on field "$tag". Try narrowing the search""")
+        case None => throw tooManyHits(tq, tag)
       }
 
     case SubfieldExists(tag, code, not) =>
@@ -544,12 +517,7 @@ final class SparkQueryCompiler(spark: SparkSession, bibs: DataFrame, auths: Data
 
     case UserMatch(field, cv) =>
       val c = if (field == "user") col("user") else col("created_user")
-      cv match {
-        case Exact(v) => normalizeCol(c) === normalize(v)
-        case TextMode(v) => normalizeCol(c) === normalize(v)
-        case rx: Rx => c.rlike(if (rx.ci) "(?i)" + rx.pattern else rx.pattern)
-        case Star => c.isNotNull
-      }
+      if (cv == Star) c.isNotNull else valueMatch(c, cv)
 
     case XrefRef(xref, not, _) =>
       val tags = DlxConfig.authorityControlled(rt).keys.toSeq
@@ -559,58 +527,23 @@ final class SparkQueryCompiler(spark: SparkSession, bibs: DataFrame, auths: Data
       if (not) !hit else hit
 
     case LogicalExists(field, not) =>
-      val hit = size(coalesce(col("logical").getItem(field), array())) > 0
+      val hit = size(logicalValues(field)) > 0
       if (not) !hit else hit
 
     case LogicalExact(field, value) =>
-      exists(coalesce(col("logical").getItem(field), array()),
-        v => normalizeCol(v) === normalize(value))
+      exists(logicalValues(field), v => normalizeCol(v) === normalize(value))
 
     case LogicalRx(field, rx, not) =>
-      val pattern = if (rx.ci) "(?i)" + rx.pattern else rx.pattern
-      collectCapped(browseIdx.where(col("field") === field && col("value").rlike(pattern))
-          .select("value").distinct()) match {
-        case Some(values) if values.isEmpty => lit(false)
-        case Some(values) =>
-          val hit = exists(coalesce(col("logical").getItem(field), array()),
-            v => normalizeCol(v).isin(values.map(normalize): _*))
-          if (not) !hit else hit
-        case None =>
+      logicalInList(field, browseIdx.where(col("field") === field && regexMatch(col("value"), rx)), not)
+        .getOrElse {
           // beyond the in-list cap: regex the record's own logical values
-          val hit = exists(coalesce(col("logical").getItem(field), array()),
-            v => v.rlike(pattern))
+          val hit = exists(logicalValues(field), v => regexMatch(v, rx))
           if (not) !hit else hit
-      }
+        }
 
     case LogicalText(field, tq, not) =>
-      val terms = Tokenizer.tokenize(tq.terms)
-      val negated = Tokenizer.tokenize(tq.negated.mkString(" "))
-      var entries = browseIdx.where(col("field") === field)
-      terms.foreach(t => entries = entries.where(array_contains(col("words"), t)))
-      negated.foreach(t => entries = entries.where(!array_contains(col("words"), t)))
-      tq.phrases.foreach { p =>
-        entries = entries.where(col("text").rlike("\\b" + java.util.regex.Pattern.quote(p) + "\\b"))
-      }
-      collectCapped(entries.select("value").distinct()) match {
-        case Some(values) if values.isEmpty => lit(false)
-        case Some(values) =>
-          val hit = exists(coalesce(col("logical").getItem(field), array()),
-            v => normalizeCol(v).isin(values.map(normalize): _*))
-          if (not) !hit else hit
-        case None =>
-          // beyond the cap: tokenized matching on the record's own
-          // logical values (browse-index words = tokenize(scrub(value)))
-          val hit = exists(coalesce(col("logical").getItem(field), array()), v => {
-            val words = tokenizeUdf(scrubUdf(v))
-            val termsOk = terms.map(t => array_contains(words, t))
-            val negOk = negated.map(t => !array_contains(words, t))
-            val phrasesOk = tq.phrases.map(p =>
-              concat(lit(" "), scrubUdf(v), lit(" "))
-                .rlike("\\b" + java.util.regex.Pattern.quote(p) + "\\b"))
-            (termsOk ++ negOk ++ phrasesOk).reduceOption(_ && _).getOrElse(lit(true))
-          })
-          if (not) !hit else hit
-      }
+      logicalInList(field, textFiltered(browseIdx.where(col("field") === field), tq, col("text")), not)
+        .getOrElse(throw tooManyHits(tq, field))
 
     case FreeText(tq) =>
       val terms = Tokenizer.tokenize(tq.terms).filterNot(Tokenizer.stopWords.contains)
@@ -619,15 +552,25 @@ final class SparkQueryCompiler(spark: SparkSession, bibs: DataFrame, auths: Data
       val negCols = negated.map(t => !array_contains(col("words"), t))
       val phraseCols = tq.phrases.map { q =>
         val phrase = Tokenizer.scrub(q.stripPrefix("\"").stripSuffix("\""))
-        col("text").rlike("\\s" + java.util.regex.Pattern.quote(phrase) + "\\s")
+        regexMatch(col("text"), Rx("\\s" + Pattern.quote(phrase) + "\\s"))
       }
-      val starCols = tq.starred.map { st =>
-        val pattern = " " + st.split("\\*", -1).map(java.util.regex.Pattern.quote).mkString(".*")
-        col("text").rlike(pattern)
-      }
+      val starCols = tq.starred.map(st =>
+        regexMatch(col("text"), Rx(" " + st.split("\\*", -1).map(Pattern.quote).mkString(".*"))))
       (termCols ++ negCols ++ phraseCols ++ starCols)
         .reduceOption(_ && _).getOrElse(lit(true))
   }
+
+  /** A logical-field condition resolved to the browse-index `entries`
+    * it matches: an in-list over the record's own logical values; no
+    * entry matches nothing, even under NOT. None = over the cap. */
+  private def logicalInList(field: String, entries: DataFrame, not: Boolean): Option[Column] =
+    collectCapped(entries.select("value").distinct()).map { values =>
+      if (values.isEmpty) lit(false)
+      else {
+        val hit = exists(logicalValues(field), v => normIn(normalizeCol(v), values))
+        if (not) !hit else hit
+      }
+    }
 
   /** The xref OR-branch as a Column: an INSET while the resolved set
     * fits, a pending flag join past the cap (any-code scope — the
@@ -637,53 +580,26 @@ final class SparkQueryCompiler(spark: SparkSession, bibs: DataFrame, auths: Data
     case XrefFrame(hits) => pnd.flag(tag, None, hits)
   }
 
-  /** value-in-set / xref OR shape shared by the direct fallbacks. */
-  private def directShape(rt: String, tag: String, code: Option[String],
-      valueHit: Column, xrefs: XrefSet, not: Boolean, pnd: Pending): Column = {
-    val xrefHit = xrefHitCol(tag, xrefs, pnd)
-    if (!not) (if (xrefs.nonEmpty) valueHit || xrefHit else valueHit)
-    else if (xrefs.nonEmpty) !valueHit && !xrefHit
-    else !valueHit
-  }
-
-  /** first configured source tag of an authority-controlled tag, if
-    * the code scope stays within authority control. */
-  private def controlledSourceTag(rt: String, tag: String, code: Option[String]): Option[String] =
-    if (DlxConfig.authorityControlled(rt).contains(tag) &&
-        code.forall(c => DlxConfig.isAuthorityControlled(rt, tag, c)))
-      DlxConfig.authorityControlled(rt).get(tag).map(_.values.head)
-    else None
-
-  /** Fallback when a regex condition's resolved in-list exceeds the cap
-    * (the reference falls back to a direct regex condition,
-    * dlx/marc/query.py:194-206): regex the record's own subfield
-    * values. The xref branch resolves through the heading dimension,
-    * itself capped at maxResolvedXrefs with the flag-join fallback. */
-  private def directRegexPredicate(rt: String, tag: String, code: Option[String],
-      rx: Rx, not: Boolean, pnd: Pending): Column = {
-    val pattern = if (rx.ci) "(?i)" + rx.pattern else rx.pattern
-    val valueHit = existsField(tag,
-      subMatch(code, literalOnly(s => s.getField("value").rlike(pattern))))
-    val xrefs: XrefSet = controlledSourceTag(rt, tag, code) match {
-      case None => XrefList(Nil)
-      case Some(src) =>
-        resolveXrefSet(headings.where(col("tag") === src && col("value").rlike(pattern)))
+  /** The value-or-xref shape of a tag-level condition: a field of
+    * `tag` carries a literal subfield (of `code`, if given) passing
+    * `value`, or an xref to a heading of the tag's source tag passing
+    * `heading` (any code). With no xref resolved it is the value test
+    * alone, negated or not. */
+  private def tagPredicate(rt: String, tag: String, code: Option[String], value: Column => Column,
+      heading: Option[Column], not: Boolean, pnd: Pending): Column = {
+    val valueHit = existsField(tag, subMatch(code, value))
+    val xrefs = heading.fold(noXrefs)(t =>
+      controlledSourceTag(rt, tag, code).fold(noXrefs)(headingXrefs(_, None, t)))
+    if (!xrefs.nonEmpty) (if (not) !valueHit else valueHit)
+    else {
+      val xrefHit = xrefHitCol(tag, xrefs, pnd)
+      if (not) !valueHit && !xrefHit else valueHit || xrefHit
     }
-    directShape(rt, tag, code, valueHit, xrefs, not, pnd)
   }
 
   /** value-in-set predicate with the auth xref OR branch. */
   private def inSetPredicate(rt: String, tag: String, code: Option[String],
-      matched: Seq[String], not: Boolean, pnd: Pending): Column = {
-    val valueHit = existsField(tag, subMatch(code, normValueIn(matched)))
-    val xrefs: XrefSet =
-      if (DlxConfig.authorityControlled(rt).contains(tag) &&
-          code.forall(c => DlxConfig.isAuthorityControlled(rt, tag, c)))
-        xrefsForValues(rt, tag, matched)
-      else XrefList(Nil)
-    val xrefHit = xrefHitCol(tag, xrefs, pnd)
-    if (!not) (if (xrefs.nonEmpty) valueHit || xrefHit else valueHit)
-    else if (xrefs.nonEmpty) !valueHit && !xrefHit
-    else !valueHit
-  }
+      matched: Seq[String], not: Boolean, pnd: Pending): Column =
+    tagPredicate(rt, tag, code, literalOnly(s => normIn(normalizeCol(s.getField("value")), matched)),
+      Some(normIn(col("norm_value"), matched)), not, pnd)
 }

@@ -10,8 +10,13 @@ import Fixtures._
 /** Generative three-way parity for the query DSL: a seeded stream of
   * random condition trees evaluated by (1) the row engine — the
   * executable semantic spec, (2) the compiler's in-list predicate
-  * path, and (3) the semi-join default path. Any divergence between
-  * the Spark plans and the row engine is a bug by definition. */
+  * path, and (3) the semi-join default path — each on the default
+  * compiler and on the two capped ones, where every xref branch is a
+  * flag join or every value in-list is over the cap. The trees are the
+  * random corpus plus a smaller heading corpus, because on the random
+  * corpus alone no xref branch becomes a flag join. Any divergence
+  * between the Spark plans and the row engine is a bug by definition;
+  * over the value cap a tree with a text leaf may raise instead. */
 class QueryParitySpec extends AnyFunSuite {
 
   import QueryParitySpec._
@@ -20,15 +25,35 @@ class QueryParitySpec extends AnyFunSuite {
   lazy val bibsDf = graft.spark.MarcSchema.toDataset(spark, Seq(pb1, pb2)).toDF()
   lazy val authsDf = graft.spark.MarcSchema.toDataset(spark, Seq(auth1, auth2)).toDF()
   lazy val compiler = new SparkQueryCompiler(spark, bibsDf, authsDf)
+  // every xref branch a flag join; every value in-list over the cap
+  lazy val noXrefs = new SparkQueryCompiler(spark, bibsDf, authsDf, maxResolvedXrefs = 0)
+  lazy val noValues = new SparkQueryCompiler(spark, bibsDf, authsDf, maxResolvedValues = 0)
   lazy val rowEngine = new RowQueryEngine(Seq(pb1, pb2), Seq(auth1, auth2))
 
+  private def ids(df: org.apache.spark.sql.DataFrame): Set[Long] =
+    df.select("_id").collect().map(_.getLong(0)).toSet
+
+  // over the value cap a text condition raises, as the reference does
+  private def hasTextLeaf(c: Cond): Boolean = c match {
+    case AndCond(cs) => cs.exists(hasTextLeaf)
+    case OrCond(cs) => cs.exists(hasTextLeaf)
+    case _: TagText | _: LogicalText => true
+    case _ => false
+  }
+
   test("random condition trees: row engine == in-list plan == semi-join plan") {
-    for ((ast, i) <- corpus.zip(LazyList.from(1))) {
+    val compilers = Seq("default" -> compiler, "maxResolvedXrefs=0" -> noXrefs,
+      "maxResolvedValues=0" -> noValues)
+    for ((ast, i) <- (corpus ++ headingCorpus).zip(LazyList.from(1))) {
       val expected = rowEngine.run(ast).flatMap(_.id).toSet
-      val inList = compiler.runInList(ast).select("_id").collect().map(_.getLong(0)).toSet
-      assert(inList == expected, s"[$i] in-list diverged for $ast: spark=$inList row=$expected")
-      val semi = compiler.runSemiJoin(ast).select("_id").collect().map(_.getLong(0)).toSet
-      assert(semi == expected, s"[$i] semi-join diverged for $ast: spark=$semi row=$expected")
+      for ((name, c) <- compilers;
+           (route, run) <- Seq[(String, QueryAst => org.apache.spark.sql.DataFrame)](
+             "in-list" -> c.runInList, "semi-join" -> c.runSemiJoin)) {
+        val got =
+          try Some(ids(run(ast)))
+          catch { case _: InvalidQueryString if (c eq noValues) && ast.conditions.exists(hasTextLeaf) => None }
+        got.foreach(g => assert(g == expected, s"[$i] $name $route diverged for $ast: spark=$g row=$expected"))
+      }
     }
   }
 }
@@ -101,14 +126,46 @@ object QueryParitySpec {
     }
   }
 
-  private def genCond(r: scala.util.Random, depth: Int): Cond =
-    if (depth <= 0 || r.nextInt(3) == 0) genLeaf(r)
-    else if (r.nextBoolean()) OrCond(Seq(genCond(r, depth - 1), genCond(r, depth - 1)))
-    else AndCond(Seq(genCond(r, depth - 1), genCond(r, depth - 1)))
+  private val headingTerms = Seq("header", "another header", "another", "zzz")
+  private val headingRegexes = Seq("[Hh]eader", "^Another", "zzz")
+
+  /** Mostly leaves on the auth-controlled tags whose values, terms and
+    * regexes hit the fixture headings, so xref branches resolve and
+    * value in-lists are non-empty: the leaves that a capped compiler
+    * turns into flag joins or over-cap fallbacks. */
+  private def genHeadingLeaf(r: scala.util.Random): Cond = {
+    val tag = Seq("650", "710")(r.nextInt(2))
+    def rx = Rx(headingRegexes(r.nextInt(headingRegexes.length)), ci = r.nextBoolean())
+    def cv: CondVal = r.nextInt(4) match {
+      case 0 => Exact(Seq("Header", "Another header", "zzz")(r.nextInt(3)))
+      case 1 => TextMode(Seq("header", "another header")(r.nextInt(2)))
+      case 2 => rx
+      case _ => Star
+    }
+    r.nextInt(5) match {
+      case 0 => FieldCond(tag, Seq("a" -> cv), modifier = Seq(None, Some("not"))(r.nextInt(2)))
+      case 1 => TagValue(tag, cv, not = r.nextBoolean())
+      case 2 => TagRegex(tag, if (r.nextBoolean()) Some("a") else None, rx, not = r.nextBoolean())
+      case 3 => TagText(tag, if (r.nextBoolean()) Some("a") else None,
+        TextQuery.fielded(headingTerms(r.nextInt(headingTerms.length))), not = r.nextBoolean())
+      case _ => genLeaf(r)
+    }
+  }
+
+  private def genCond(r: scala.util.Random, depth: Int, leaf: scala.util.Random => Cond): Cond =
+    if (depth <= 0 || r.nextInt(3) == 0) leaf(r)
+    else if (r.nextBoolean()) OrCond(Seq(genCond(r, depth - 1, leaf), genCond(r, depth - 1, leaf)))
+    else AndCond(Seq(genCond(r, depth - 1, leaf), genCond(r, depth - 1, leaf)))
 
   /** The 40 seeded condition trees the parity test runs. */
   def corpus: Seq[QueryAst] = {
     val r = new scala.util.Random(20260812L)
-    Seq.fill(40)(QueryAst(Seq(genCond(r, 2)), "bib"))
+    Seq.fill(40)(QueryAst(Seq(genCond(r, 2, genLeaf)), "bib"))
+  }
+
+  /** 10 seeded trees over mostly heading leaves (genHeadingLeaf). */
+  def headingCorpus: Seq[QueryAst] = {
+    val r = new scala.util.Random(20261020L)
+    Seq.fill(10)(QueryAst(Seq(genCond(r, 2, genHeadingLeaf)), "bib"))
   }
 }

@@ -65,6 +65,28 @@ class SerializationSpec extends AnyFunSuite {
     assert(rec.getXref("650", "a").contains(1L))
   }
 
+  test("MRK and MARCXML apply the same parse-time auth control") {
+    def auth(id: Long, subs: (String, String)*) = MarcRecord(recordType = "auth", id = Some(id),
+      fields = Vector(DataField("150", " ", " ",
+        subs.toVector.map { case (c, v) => Subfield(c, Some(v)) })))
+    val lk = new graft.auth.AuthIndex(Seq(
+      auth(1L, "a" -> "Unique"),
+      // two candidates; only auth 3's heading is exactly [a Shared]
+      auth(3L, "a" -> "Shared"), auth(4L, "a" -> "Shared", "x" -> "Extra"),
+      // exact duplicates: nothing disambiguates
+      auth(5L, "a" -> "Twin"), auth(6L, "a" -> "Twin")))
+    val parsers: Seq[(String, String => MarcRecord)] = Seq(
+      "mrk" -> (v => S.fromMrk("bib", s"=650  \\\\$$a$v\n")(lk)),
+      "xml" -> (v => S.fromXml("bib",
+        s"""<record><datafield tag="650" ind1=" " ind2=" "><subfield code="a">$v</subfield></datafield></record>""")(lk)))
+    for ((fmt, parse) <- parsers) {
+      assert(parse("Unique").getXref("650", "a").contains(1L), fmt)
+      assert(parse("Shared").getXref("650", "a").contains(3L), fmt)
+      intercept[graft.records.InvalidAuthValue](parse("Nope"))
+      intercept[graft.records.AmbiguousAuthValue](parse("Twin"))
+    }
+  }
+
   test("set from_mrk splits on blank lines (tests/marc.mrk shape)") {
     val mrk =
       "=000  leader\n=008  controlfield\n=245  \\\\$aThis$bis the$ctitle\n=520  \\\\$aDescription\n" +

@@ -224,7 +224,7 @@ class SparkMarcSpec extends AnyFunSuite {
     // fielded, 452-458 logical) — the capped compiler must too
     val capped = new SparkQueryCompiler(spark, bibsDs.toDF(), authsDs.toDF(),
       maxResolvedValues = 0)
-    for (q <- Seq("520__a:\"another description\"", "NOT 245__a:this"))
+    for (q <- Seq("520__a:\"another description\"", "NOT 245__a:this", "title:this"))
       intercept[graft.query.InvalidQueryString] { capped.runInList(q) }
     // zero-match text still takes the reference's match-nothing quirk
     // (an empty resolution can never be over-cap), even under NOT
