@@ -2,7 +2,7 @@ package graft.cli
 
 import graft.model.AuthLookup
 import graft.records.Serialization
-import graft.spark.{AuthOps, LogicalFields, MarcContext, MarcSchema}
+import graft.spark.{AuthOps, DerivedColumns, MarcContext, MarcSchema}
 import graft.store.MarcStore
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
@@ -56,10 +56,8 @@ object BuildLogicalFields {
     val (spark, preExisting) = Cli.obtainSession()
     val base = args.headOption.getOrElse(sys.error("usage: BuildLogicalFields <base>"))
     val store = new MarcStore(spark, base)
-    val all = Seq("bib", "auth").map { rt =>
-      LogicalFields.withLogical(store.read(rt).toDF(), rt)
-    }.reduce(_ unionByName _)
-    MarcContext.browseIndex(all).write.mode("overwrite").parquet(s"$base/browse_index")
+    val all = DerivedColumns.derive(store.read("bib").unionByName(store.read("auth")))
+    MarcContext.browseIndex(all.toDF()).write.mode("overwrite").parquet(s"$base/browse_index")
     println(s"browse index rebuilt at $base/browse_index")
     Cli.release(spark, preExisting)
   }
@@ -76,12 +74,10 @@ object InitIndexes {
     val (spark, preExisting) = Cli.obtainSession()
     val base = args.headOption.getOrElse(sys.error("usage: InitIndexes <base>"))
     val store = new MarcStore(spark, base)
-    val records = store.read("bib").toDF().unionByName(store.read("auth").toDF())
-    MarcContext.tagIndex(records).write.mode("overwrite").parquet(s"$base/tag_index")
-    val withLogical = Seq("bib", "auth").map { rt =>
-      LogicalFields.withLogical(store.read(rt).toDF(), rt)
-    }.reduce(_ unionByName _)
-    MarcContext.browseIndex(withLogical).write.mode("overwrite").parquet(s"$base/browse_index")
+    val records = store.read("bib").unionByName(store.read("auth"))
+    MarcContext.tagIndex(records.toDF()).write.mode("overwrite").parquet(s"$base/tag_index")
+    MarcContext.browseIndex(DerivedColumns.derive(records).toDF())
+      .write.mode("overwrite").parquet(s"$base/browse_index")
     MarcContext.authHeadings(store.read("auth").toDF())
       .write.mode("overwrite").parquet(s"$base/headings")
     println(s"indexes materialized at $base/{tag_index,browse_index,headings}")

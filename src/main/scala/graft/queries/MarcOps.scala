@@ -2,7 +2,7 @@ package graft.queries
 
 import graft.model.{AuthLookup, MarcRecord}
 import graft.records.Serialization
-import graft.spark.{AuthOps, LogicalFields, MarcContext, SparkQueryCompiler}
+import graft.spark.{AuthOps, DerivedColumns, MarcContext, SparkQueryCompiler}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import Tables._
@@ -177,9 +177,8 @@ object MarcOps {
     * subject browse counts. Uses the single-field generator — reading
     * one logical field must not pay for the whole map. */
   def q27MarcLogical(s: SparkSession, dir: String): DataFrame = {
-    val subjectSpec = graft.config.DlxConfig.bibLogicalFields.toMap.apply("subject")
     marcBibs(s, dir)
-      .select(explode(LogicalFields.fieldValues("subject", subjectSpec)).as("subject"))
+      .select(explode(DerivedColumns.fieldValues("bib", "subject")).as("subject"))
       .groupBy("subject").agg(count(lit(1)).as("n_bibs"))
       .orderBy("subject")
   }
@@ -447,13 +446,8 @@ object MarcOps {
     // must not pay for the whole map — the full-map variant costs 6×
     // here because browse-index build + final scan each materialize
     // every configured field for every record)
-    def oneField(df: DataFrame, rt: String): DataFrame = {
-      val spec = graft.config.DlxConfig.logicalFields(rt).toMap.apply("subject")
-      df.withColumn("logical",
-        map(lit("subject"), LogicalFields.fieldValues("subject", spec)))
-    }
-    val compiler = new SparkQueryCompiler(s,
-      oneField(marcBibs(s, dir), "bib"), oneField(marcAuths(s, dir), "auth"))
+    val compiler = new SparkQueryCompiler(s, RealMarc.subjectField(marcBibs(s, dir), "bib"),
+      RealMarc.subjectField(marcAuths(s, dir), "auth"))
     compiler.run("subject:/anvil$/").select("_id").orderBy("_id")
   }
 

@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.spark.{AuthOps, LogicalFields, MarcContext, SparkQueryCompiler}
+import graft.spark.{AuthOps, DerivedColumns, MarcContext, SparkQueryCompiler}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -309,11 +309,8 @@ object RealMarc {
   // scale; the oracle is the SAME relational answer, so each gate is
   // exactly "the degraded plan equals the primary path".
 
-  private[graft] def subjectField(df: DataFrame, rt: String): DataFrame = {
-    val spec = graft.config.DlxConfig.logicalFields(rt).toMap.apply("subject")
-    df.withColumn("logical",
-      map(lit("subject"), LogicalFields.fieldValues("subject", spec)))
-  }
+  private[graft] def subjectField(df: DataFrame, rt: String): DataFrame =
+    df.withColumn("logical", map(lit("subject"), DerivedColumns.fieldValues(rt, "subject")))
 
   /** q188's query through the browse-index OVER-CAP fallback
     * (SparkQueryCompiler LogicalRx None branch: regex the record's own

@@ -402,11 +402,8 @@ object StoreOps {
         lit(null).cast("string").as("text"),
         lit(null).cast("array<string>").as("words"),
         lit(null).cast("map<string,array<string>>").as("logical"))
-    // derive text/words/logical in-plan (executor-side), the same
-    // idiom the cascade's re-commit uses
-    val recs = raw.as[MarcRow]
-      .map(r => MarcSchema.toRow(MarcSchema.fromRow(r))(graft.model.AuthLookup.Empty))
-    store.commit(recs, user = "alice", now = ts1)
+    // the store derives text/words/logical from the datafields
+    store.commit(raw.as[MarcRow], user = "alice", now = ts1)
     store.delete("bib", pmod(col("_id"), lit(3880L)) === 0, user = "bob", now = ts2)
     graft.spark.MarcContext.browseIndex(store.read("bib").toDF())
       .where(col("field").isin("main_title", "notes"))

@@ -194,15 +194,17 @@ object AuthOps {
   def refreshLinkedValues(records: DataFrame, auths: DataFrame): DataFrame =
     MarcContext.resolveLinked(stripLinkedValues(records), auths)
 
-  /** Typed refresh through the size-auto resolution path — the
-    * broadcast map (zero shuffle) while the heading dimension fits,
-    * the join above it. */
-  def refreshLinkedValuesTyped(records: org.apache.spark.sql.Dataset[MarcRow],
+  /** The tail of the cascade's and merge's rewrites, before their
+    * re-commit derives the columns: strip the linked values, drop the
+    * fields that are now duplicates (two fields linking one auth compare
+    * equal once stripped), and resolve against the heading dimension
+    * through the size-auto path (broadcast map while it fits, else the
+    * join). */
+  def relink(records: org.apache.spark.sql.Dataset[MarcRow],
       auths: DataFrame): org.apache.spark.sql.Dataset[MarcRow] = {
     import MarcSchema.marcRowEncoder
-    val cols = records.columns
-    MarcContext.resolveLinkedAuto(
-      stripLinkedValues(records.toDF()).select(cols.map(col): _*).as[MarcRow], auths)
+    MarcContext.resolveLinkedAuto(stripLinkedValues(records.toDF())
+      .withColumn("datafields", array_distinct(col("datafields"))).as[MarcRow], auths)
   }
 
   /** Typeahead over the heading dimension (reference partial_lookup,

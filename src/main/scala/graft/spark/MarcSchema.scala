@@ -10,7 +10,8 @@ import org.apache.spark.sql.{Dataset, Encoder, Encoders, SparkSession}
   * order. Linked vs literal subfields = nullable xref, exactly how the
   * reference BSON persists them (dlx/marc/__init__.py:2689-2725).
   * `text`/`words`/`logical` are the denormalized commit-time columns
-  * (dlx/marc/__init__.py:954-956, 1050-1052).
+  * (dlx/marc/__init__.py:954-956, 1050-1052), derived from
+  * `datafields` by [[DerivedColumns]].
   */
 final case class SubfieldRow(code: String, value: String, xref: java.lang.Long)
 final case class DataFieldRow(tag: String, ind1: String, ind2: String,
@@ -36,22 +37,10 @@ object MarcSchema {
 
   implicit val marcRowEncoder: Encoder[MarcRow] = Encoders.product[MarcRow]
 
-  def toRow(rec: MarcRecord)(implicit auth: AuthLookup): MarcRow = {
-    val ctrl = rec.fields.collect { case ControlField(t, v) => ControlFieldRow(t, v) }
-    val data = rec.fields.collect { case d: DataField =>
-      DataFieldRow(d.tag, d.ind1, d.ind2, d.subfields.map { s =>
-        SubfieldRow(s.code, s.resolvedValue(auth).orNull,
-          s.xref.map(Long.box).orNull)
-      })
-    }
-    val fieldTexts = rec.fields.collect { case d: DataField =>
-      d.subfields.map(_.resolvedValue(auth).getOrElse("")).mkString(" ")
-    }
-    // record text = scrubbed field texts joined; words = tokenize of
-    // the SCRUBBED text, duplicates kept (reference commit,
-    // dlx/marc/__init__.py:953-956: data['words'] = tokenize(text))
-    val text = fieldTexts.map(graft.text.Tokenizer.scrub).mkString(" ")
-    val words = graft.text.Tokenizer.tokenize(text)
+  /** The record as a row, linked values resolved through `auth`; the
+    * derived `text`/`words`/`logical` stay null ([[DerivedColumns]]
+    * fills them). */
+  def toRow(rec: MarcRecord)(implicit auth: AuthLookup): MarcRow =
     MarcRow(
       record_type = rec.recordType,
       // -1 = unassigned (0 is a legitimate id — e.g. partkey-derived
@@ -63,12 +52,13 @@ object MarcSchema {
       user = rec.user.orNull,
       basket = rec.basket.orNull,
       leader = rec.leader,
-      controlfields = ctrl,
-      datafields = data,
-      text = " " + text + " ",
-      words = words,
-      logical = rec.logicalFields().map { case (k, v) => k -> (v: Seq[String]) })
-  }
+      controlfields = rec.fields.collect { case ControlField(t, v) => ControlFieldRow(t, v) },
+      datafields = rec.fields.collect { case d: DataField =>
+        DataFieldRow(d.tag, d.ind1, d.ind2, d.subfields.map { s =>
+          SubfieldRow(s.code, s.resolvedValue(auth).orNull, s.xref.map(Long.box).orNull)
+        })
+      },
+      text = null, words = null, logical = null)
 
   def fromRow(row: MarcRow): MarcRecord = {
     val fields: Vector[Field] =
@@ -97,8 +87,6 @@ object MarcSchema {
       fields = fields)
   }
 
-  def toDataset(spark: SparkSession, recs: Seq[MarcRecord])(implicit auth: AuthLookup): Dataset[MarcRow] = {
-    import spark.implicits._
-    spark.createDataset(recs.map(toRow))
-  }
+  def toDataset(spark: SparkSession, recs: Seq[MarcRecord])(implicit auth: AuthLookup): Dataset[MarcRow] =
+    DerivedColumns.derive(spark.createDataset(recs.map(toRow)))
 }

@@ -1,6 +1,6 @@
 package graft.store
 
-import graft.spark.{AuthOps, MarcContext, MarcRow, MarcSchema}
+import graft.spark.{AuthOps, DerivedColumns, MarcContext, MarcRow, MarcSchema}
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -13,8 +13,10 @@ import org.apache.spark.sql.functions._
   * stage → journal → rename commit:
   *  - live tables are parquet partitioned by `id_bucket`
   *    (pmod(_id, numBuckets)): a commit rewrites ONLY the buckets its
-  *    batch touches (staged, then swapped in by rename), so write cost
-  *    is O(touched buckets), never O(table);
+  *    batch touches (staged, then swapped in by rename), so what a
+  *    commit WRITES is O(touched buckets), never O(table); what it
+  *    reads is not: the prev-audit join reads every live row and the
+  *    version count the whole history table;
   *  - history is append-only: each commit/delete adds one row per
   *    version, staged next to the buckets and promoted under the same
   *    swap journal — no rewrite amplification; version numbers come
@@ -24,6 +26,8 @@ import org.apache.spark.sql.functions._
   *    no Spark job.
   *
   * One commit batch = one deterministic job:
+  *   0. derive `text`/`words`/`logical` from the datafields
+  *      ([[DerivedColumns]]), whatever the caller's batch carried,
   *   1. assign ids to new records (max_id + dense zipWithIndex — the
   *      batch form of the reference's $inc counter; no global window,
   *      no single-task funnel),
@@ -240,14 +244,16 @@ final class MarcStore(spark: SparkSession, basePath: String, numBuckets: Int = 6
       authCheck: Boolean = true, updateAttached: Boolean = true,
       action: String = "commit"): Unit = StoreLock.withLock(basePath, lockWaitMs) {
     recoverAllStaging() // BEFORE any plan reads the tables (r11 review)
-    // pin the caller's batch ONCE before anything reads it: the stats
+    // derive, then pin the batch ONCE before anything reads it (so the
+    // derivation stays out of the write's stages, whose generated code
+    // changes with every commit's `now`): the stats
     // aggregate, validation, and the write path otherwise each
     // re-evaluate the caller's construction lineage (a MARC build is
     // typically scans + joins + struct transforms — the round-8 store
     // profile measured that re-evaluation as the single largest share
     // of commit wall). LAZY: the stats job right below computes every
     // partition and materializes the blocks as a side effect.
-    val recsCk = recs.localCheckpoint(false)
+    val recsCk = DerivedColumns.derive(recs).localCheckpoint(false)
     // ONE job answers "empty?", "which record type?", "how many rows
     // need ids?" AND "which buckets does the batch touch?" (each was
     // its own action before). The touched set is only authoritative
@@ -478,19 +484,16 @@ final class MarcStore(spark: SparkSession, basePath: String, numBuckets: Int = 6
     finishCascade(restructured, user, now)
   }
 
-  /** Shared cascade tail: refresh materialized linked values against
-    * the NEW heading state, recompute the derived text/words/logical
-    * columns, and re-commit the attached bibs. */
+  /** Shared cascade tail: re-link the attached bibs against the NEW
+    * heading state ([[AuthOps.relink]]), derive their text/words/logical
+    * columns, and re-commit them. Ids are assigned and validation is
+    * moot (only linked values changed), so they go straight to the
+    * write path, pinned as commit() pins its batch: the pipeline runs
+    * once, in a stage whose generated code does not change with `now`. */
   private def finishCascade(restructured: Dataset[MarcRow],
-      user: String, now: java.sql.Timestamp): Unit = {
-    val refreshed = AuthOps.refreshLinkedValuesTyped(restructured, read("auth").toDF())
-      .map(r => MarcSchema.toRow(MarcSchema.fromRow(r))(graft.model.AuthLookup.Empty))
-    // attached ids are already assigned and validation is moot (only
-    // linked values changed) — go straight to the write path so the
-    // refresh pipeline is evaluated ONCE (by the checkpoint), not
-    // twice (stats agg + checkpoint)
-    commitPrepared(refreshed, user, now, "bib", updateAttached = false)
-  }
+      user: String, now: java.sql.Timestamp): Unit =
+    commitPrepared(DerivedColumns.derive(AuthOps.relink(restructured, read("auth").toDF()))
+      .localCheckpoint(false), user, now, "bib", updateAttached = false)
 
   /** Append-only debug logs — the reference's `merge_log` and
     * `auth_linked_update_log` collections (dlx/marc/__init__.py:
@@ -518,12 +521,14 @@ final class MarcStore(spark: SparkSession, basePath: String, numBuckets: Int = 6
 
   def authLinkedUpdateLog: DataFrame = authLinkedUpdateLogTable.read
 
-  /** Auth.merge (dlx/marc/__init__.py:2143-2233): stamp the losing/
-    * gaining pair into merge_log, rewrite losing -> gaining xrefs
-    * across every record type, then delete the losing auth (the
-    * rewrite cleared every reference, so the AuthInUse guard passes).
-    * Only records that actually reference the losing auth are
-    * re-committed — O(attached), never O(table). */
+  /** Auth.merge (dlx/marc/__init__.py:2143-2233): rewrite losing ->
+    * gaining xrefs across every record type, re-link the rewritten
+    * records through the cascade's tail ([[AuthOps.relink]]), stamp the
+    * losing/gaining pair into merge_log, re-commit the records, then
+    * delete the losing auth (the rewrite cleared every reference, so
+    * the AuthInUse guard passes). A refused merge writes nothing. Only
+    * records that actually reference the losing auth are re-committed
+    * — O(attached), never O(table). */
   def merge(gaining: Long, losing: Long, user: String = "admin",
       now: java.sql.Timestamp = java.sql.Timestamp.from(java.time.Instant.now()))
       : Unit = StoreLock.withLock(basePath, lockWaitMs) {
@@ -538,13 +543,6 @@ final class MarcStore(spark: SparkSession, basePath: String, numBuckets: Int = 6
       s"Auth merge refused: gaining and losing are the same auth ($gaining)")
     require(!read("auth").where(col("_id") === gaining).isEmpty,
       s"Auth merge refused: gaining auth $gaining does not exist")
-    // the lock spans the whole stamp -> rewrite -> delete sequence
-    // (re-entrant for the inner commits), so a concurrent writer can
-    // never observe a half-merged store
-    appendLog(mergeLogTable,
-      Seq(("auth", losing, "losing"), ("auth", gaining, "gaining"))
-        .toDF("record_type", "record_id", "action")
-        .withColumn("time", lit(now)).withColumn("user", lit(user)))
     // FUSED legs (round-8 store profile): one scan finds the
     // referencing records of BOTH types and the rewrite is pinned
     // once; the per-type commits below read the shared blocks. The
@@ -553,7 +551,8 @@ final class MarcStore(spark: SparkSession, basePath: String, numBuckets: Int = 6
     val referencing = read("bib").toDF().unionByName(read("auth").toDF())
       .where(exists(col("datafields"), f =>
         exists(f.getField("subfields"), sf => sf.getField("xref") === losing)))
-    val rewritten = AuthOps.mergeAuthXrefs(referencing, losing, gaining)
+    val rewritten = AuthOps.relink(
+        AuthOps.mergeAuthXrefs(referencing, losing, gaining).as[MarcRow], read("auth").toDF())
       .localCheckpoint(false)
     // Validation precondition instead of two full validate joins: live
     // records are valid by store invariant (every commit validates,
@@ -573,9 +572,15 @@ final class MarcStore(spark: SparkSession, basePath: String, numBuckets: Int = 6
     require(missing.isEmpty,
       s"Auth merge failed: gaining auth $gaining has no heading subfield(s) " +
         s"${missing.mkString(", ")} required by records referencing $losing")
+    // the lock spans the whole stamp -> rewrite -> delete sequence
+    // (re-entrant for the inner commits), so a concurrent writer can
+    // never observe a half-merged store
+    appendLog(mergeLogTable,
+      Seq(("auth", losing, "losing"), ("auth", gaining, "gaining"))
+        .toDF("record_type", "record_id", "action")
+        .withColumn("time", lit(now)).withColumn("user", lit(user)))
     for (rt <- Seq("bib", "auth"))
-      commit(rewritten.where(col("record_type") === rt).as[MarcRow],
-        user = user, now = now, authCheck = false)
+      commit(rewritten.where(col("record_type") === rt), user = user, now = now, authCheck = false)
     // the in-use guard is PROVABLY satisfied here: the two re-commits
     // above rewrote every record whose any-field xref equaled `losing`
     // (the same predicate the guard's semi-join would probe), and the

@@ -36,8 +36,8 @@ class SparkMarcSpec extends AnyFunSuite {
     assert(r1.logical("_record_type") == Seq("default", "bib"))
     // duplicates kept, like reference commit (test_marc.py:123-126:
     // 'TESTING TESTING 1234' -> ['test', 'test', '1234'])
-    val dup = MarcSchema.toRow(graft.model.MarcRecord(recordType = "bib", id = Some(9L))
-      .set("245", "a", "TESTING TESTING 1234"))(graft.model.AuthLookup.Empty)
+    val dup = MarcSchema.toDataset(spark, Seq(graft.model.MarcRecord(recordType = "bib", id = Some(9L))
+      .set("245", "a", "TESTING TESTING 1234")))(graft.model.AuthLookup.Empty).head()
     assert(dup.text == " testing testing 1234 ")
     assert(dup.words == Seq("test", "test", "1234"))
   }
@@ -653,7 +653,7 @@ class SparkMarcSpec extends AnyFunSuite {
     assert(readsCache(typeahead))
     assert(typeahead.collect().map(r => (r.getString(0), r.getLong(1))).toSeq == Seq("Updated Header" -> 1L))
     val (bibs, plans) = actionPlans {
-      AuthOps.refreshLinkedValuesTyped(store.read("bib"), store.read("auth").toDF()).collect()
+      AuthOps.relink(store.read("bib"), store.read("auth").toDF()).collect()
     }
     assert(plans.exists(readsCache)) // resolveLinkedAuto's dimension probe
     val linked = bibs.flatMap(_.datafields).flatMap(_.subfields).collect {
@@ -773,6 +773,59 @@ class SparkMarcSpec extends AnyFunSuite {
     val c = new SparkQueryCompiler(spark, store.read("bib").toDF(), store.read("auth").toDF())
     val hits = c.run("710:'will not be deleted'").select("_id").collect().map(_.getLong(0)).toSet
     assert(hits == Set(10L))
+  }
+
+  test("merge re-links what it rewrites: linked value, derived columns, one field per auth") {
+    def auth(id: Long, heading: String) = MarcRecord(recordType = "auth", id = Some(id),
+      fields = Vector(DataField("150", " ", " ", Vector(Subfield("a", Some(heading))))))
+    def bib(id: Long, xrefs: Long*) = MarcRecord(recordType = "bib", id = Some(id),
+      fields = DataField("245", " ", " ", Vector(Subfield("a", Some(s"Title $id")))) +:
+        xrefs.map(x => DataField("650", " ", " ", Vector(Subfield("a", None, Some(x))))).toVector)
+    val auths = Seq(auth(1L, "Alpha heading"), auth(2L, "Beta heading"))
+    val lk: AuthLookup = new graft.auth.AuthIndex(auths)
+    def store(bibs: MarcRecord*) = {
+      val s = new graft.store.MarcStore(spark,
+        java.nio.file.Files.createTempDirectory("marcstore_merge").toString)
+      s.commit(MarcSchema.toDataset(spark, auths)(lk), user = "t")
+      s.commit(MarcSchema.toDataset(spark, bibs)(lk), user = "t")
+      s
+    }
+    val merged = store(bib(10L, 1L), bib(11L, 2L), bib(12L, 1L, 2L))
+    merged.merge(gaining = 1L, losing = 2L, user = "t2")
+    val got = merged.read("bib").where(col("_id") === 11L).head()
+    val want = store(bib(11L, 1L)).read("bib").head()
+    assert(got.datafields == want.datafields)
+    assert(got.datafields(1).subfields.head.value == "Alpha heading")
+    assert((got.text, got.words, got.logical) == ((want.text, want.words, want.logical)))
+    // both 650s of bib 12 now link auth 1: one is left
+    val b12 = merged.read("bib").where(col("_id") === 12L).head()
+    assert(b12.datafields.count(_.tag == "650") == 1)
+    val c = new SparkQueryCompiler(spark, merged.read("bib").toDF(), merged.read("auth").toDF())
+    def ids(q: String) = c.run(q).select("_id").collect().map(_.getLong(0)).toSet
+    assert(ids("alpha") == Set(10L, 11L, 12L))
+    assert(ids("subject:/Alpha/") == Set(10L, 11L, 12L))
+    assert(ids("beta").isEmpty)
+    assert(merged.authLinkedUpdateLog.count() == 0L) // re-linking is not a cascade
+  }
+
+  test("a merge the heading-code check refuses leaves no merge_log row") {
+    val dir = java.nio.file.Files.createTempDirectory("marcstore_merge_refused").toString
+    val store = new graft.store.MarcStore(spark, dir)
+    // 700$g links a heading's $g: auth 2 has one, auth 1 does not
+    val a1 = MarcRecord(recordType = "auth", id = Some(1L), fields = Vector(
+      DataField("100", " ", " ", Vector(Subfield("a", Some("Alpha person"))))))
+    val a2 = MarcRecord(recordType = "auth", id = Some(2L), fields = Vector(
+      DataField("100", " ", " ", Vector(Subfield("a", Some("Beta person")), Subfield("g", Some("Qualifier"))))))
+    val lk: AuthLookup = new graft.auth.AuthIndex(Seq(a1, a2))
+    val b = MarcRecord(recordType = "bib", id = Some(10L), fields = Vector(
+      DataField("700", " ", " ", Vector(Subfield("a", None, Some(2L)), Subfield("g", None, Some(2L))))))
+    store.commit(MarcSchema.toDataset(spark, Seq(a1, a2))(lk), user = "t")
+    store.commit(MarcSchema.toDataset(spark, Seq(b))(lk), user = "t")
+    val e = intercept[IllegalArgumentException] { store.merge(gaining = 1L, losing = 2L) }
+    assert(e.getMessage.contains("heading subfield(s) g"))
+    assert(store.mergeLog.count() == 0L)
+    assert(store.read("auth").count() == 2L)
+    assert(store.read("bib").head().datafields.head.subfields.map(_.xref.longValue) == Seq(2L, 2L))
   }
 
   test("auth delete guard: in-use auths cannot be deleted") {
